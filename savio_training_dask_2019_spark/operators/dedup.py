@@ -779,6 +779,15 @@ def _persistent_rdd_ids(sc) -> set:
     return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
 
+def _checkpoint_rdd_ids(df: DataFrame) -> set:
+    """The id of the RDD behind an eagerly ``localCheckpoint``-ed frame —
+    the one :func:`_release_rdds` frees once the frame is superseded.
+    Unlike a before/after diff of :func:`_persistent_rdd_ids`, it never
+    picks up a cache that the checkpoint's own job materialized first (a
+    caller's lazy ``persist()`` of the input)."""
+    return {df._jdf.logicalPlan().rdd().id()}
+
+
 def _release_rdds(sc, ids: set) -> None:
     """Unpersist checkpoint blocks by RDD id via
     ``JavaSparkContext.getPersistentRDDs``. ``Dataset.unpersist()`` on a

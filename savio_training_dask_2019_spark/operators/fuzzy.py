@@ -143,12 +143,15 @@ def _substrings(s: DataFrame, k: int) -> DataFrame:
         # r19: the dedup's exchange is PINNED at the session's shuffle width
         # (REPARTITION_BY_NUM on the dedup keys — the aggregate reuses this
         # exchange, so it replaces rather than adds a shuffle). Rationale:
-        # the block join runs IN THE SAME STAGE as this exchange's read
-        # (the other side broadcasts at toy scale / co-partitions at
-        # corpus scale), so the exchange's partition count IS the
-        # parallelism of the join fan-out + banded-verify compute — the
-        # query's dominant term, invisible to AQE's bytes-based coalescing
-        # because it happens after the shuffle read (measured: AQE
+        # while the other side broadcasts (toy scale), the block join runs
+        # IN THE SAME STAGE as this exchange's read, so the exchange's
+        # partition count IS the parallelism of the join fan-out +
+        # banded-verify compute — the query's dominant term, invisible to
+        # AQE's bytes-based coalescing because it happens after the
+        # shuffle read. At corpus scale the pin does NOT co-partition the
+        # join: it is keyed (id, i, La, blk) and the join on (i, La, blk),
+        # so a shuffle join re-partitions both sides and the pin then sets
+        # only the dedup's width (measured at toy scale: AQE
         # coalesced this sub-MB exchange to 1 task and fuzzy_join ran
         # 16.9 s; pinned at the shuffle width it runs the verify on every
         # core). This was r18's global minPartitionSize=64k floor, scoped

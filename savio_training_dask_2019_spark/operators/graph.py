@@ -14,19 +14,63 @@ drift_psi_windowed post-mortem documents). The quantization loses at most
 ``deg-1`` micro-units per node per iteration — a rounding model, not a
 correctness hazard, and identical everywhere.
 
-Scale: the Pregel-style plan — the edge list (joined once with out-degrees,
-persisted) is the only corpus-sized state; each iteration is ONE hash join
-``edges ⋈ ranks`` on src (ranks is O(nodes); Spark broadcasts it while it
-fits and shuffle-joins beyond that — both correct) plus ONE map-side
-partial-aggregated ``groupBy(dst).sum``. ``localCheckpoint`` per iteration
-truncates lineage exactly as ``connected_components`` does; driver state is
-one scalar (the node count).
+Scale: the Pregel-style plan — the checkpointed edge list is the only
+corpus-sized state (out-degrees ride on the O(nodes) rank table); each
+iteration is ONE hash join ``edges ⋈ ranks`` on src (it broadcasts while
+the node count fits the session's broadcast threshold — the rule is in
+:func:`pagerank`) plus ONE map-side partial-aggregated ``groupBy(dst)``.
+``localCheckpoint`` per iteration truncates lineage exactly as
+``connected_components`` does, and superseded rounds are released; driver
+state is one scalar (the node count).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _checkpoint_rdd_ids, _release_rdds
+
+
+# Spark's own size estimate for a row of three longs (8 B row header + 3 × 8 B)
+_RANK_ROW_BYTES = 32
+
+
+def _broadcast_fits(spark, n_rows: int) -> bool:
+    """True when ``n_rows`` rank rows ``(src, rank_micro, deg)`` fit the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (read through
+    SQLConf, so every byte-string form of the conf parses; ≤ 0 disables
+    broadcasting)."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 < n_rows * _RANK_ROW_BYTES <= limit
+
+
+def _pagerank_round(
+    edges: DataFrame, ranks: DataFrame, contrib: Column, update: Column, bcast: bool
+) -> DataFrame:
+    """One un-materialized PageRank round over ``edges (src, dst, [w])`` and
+    ``ranks (id, rank_micro, deg)``: a hash join on src (``ranks`` hinted
+    ``broadcast`` when ``bcast``) gives each edge's ``contrib``; ONE
+    ``groupBy(dst)`` sums them, with a zero row per node, into ``s``; and
+    ``update`` turns ``s`` into the new rank. The zero rows stand in for
+    ``nodes LEFT JOIN contrib`` plus ``coalesce(s, 0)`` — a BIGINT sum that
+    includes a 0 is the same value — so a node without in-edges still gets
+    its row (rank = base). They also
+    carry each node's out-degree into the next round; the contribution rows
+    carry NULL there, so ``max`` returns it unchanged."""
+    r = ranks.select(F.col("id").alias("src"), "rank_micro", "deg")
+    c = (
+        edges.join(F.broadcast(r) if bcast else r, "src")
+        .where(F.col("dst").isNotNull())  # a NULL dst is no node's in-edge
+        .select("dst", contrib.alias("c"), F.lit(None).cast("bigint").alias("deg"))
+    )
+    zero = ranks.select(F.col("id").alias("dst"), F.lit(0).cast("bigint").alias("c"), "deg")
+    return (
+        c.unionByName(zero)
+        .groupBy("dst")
+        .agg(F.sum("c").alias("s"), F.max("deg").alias("deg"))
+        .select(F.col("dst").alias("id"), update.alias("rank_micro"), "deg")
+    )
 
 
 def pagerank(
@@ -48,84 +92,86 @@ def pagerank(
     outgoing weight — still pure BIGINT adds and floor divs, so the
     weighted variant keeps the same engine/partitioning exactness
     (``r·w`` stays inside int64 for weights up to ~9e12 at the default
-    scale). Non-positive or NULL weights are rejected HERE with a
-    ``ValueError`` before any iteration runs: a node whose out-weight sums
-    to 0 would turn ``(r·w) div W_src`` into a NULL that ``sum`` silently
-    drops, corrupting ranks instead of failing (ADVICE r10). The guard is
-    one ``limit(1)`` probe — a bounded single-row collect, not a
-    row-proportional driver transfer.
+    scale). Non-positive or NULL weights are rejected with a ``ValueError``
+    before any round runs: a node whose out-weight sums to 0 would turn
+    ``(r·w) div W_src`` into a NULL that ``sum`` silently drops, corrupting
+    ranks instead of failing (ADVICE r10). The guard is one ``limit(1)``
+    probe of the checkpointed edge list — a bounded single-row collect.
 
     Contract: every node must have out-degree >= 1 (no dangling mass) —
     pass a SYMMETRIZED edge list (both directions) for undirected graphs,
     which satisfies this automatically. Self-loops are allowed. Duplicate
     edges count as parallel edges (dedupe upstream if unwanted).
 
-    The driver holds exactly one scalar (N, the node count); everything
-    else is DataFrame state checkpointed per iteration.
+    Plan: the caller's edge plan runs ONCE, into the checkpointed edge
+    list. The node table ``(id, deg)`` — every id seen as src or dst, with
+    its out-degree — is one map-side-combined aggregation over that
+    checkpoint, so set-up never joins the edge list with its degrees nor
+    shuffles it on src; its row count is the one driver scalar (N). Each
+    round is one hash join ``edges ⋈ ranks`` on src plus one
+    ``groupBy(dst)`` (:func:`_pagerank_round`), ``localCheckpoint``-ed to
+    cut the lineage.
+
+    Broadcast rule: the ranks side is hinted ``broadcast`` when
+    ``N × 32 B`` (Spark's estimate for a row of three longs) is within the
+    session's ``spark.sql.autoBroadcastJoinThreshold``. The optimizer
+    cannot decide this itself: a checkpoint's ``LogicalRDD`` keeps the
+    product-of-sizes estimates of the plan it replaced, and they compound
+    round over round (at sf0.01 the fifth round's 1,600-row rank table is
+    estimated at ~1e61 B), so unhinted it plans a sort-merge join that
+    shuffles the whole edge list every round. Past the threshold, or with
+    broadcasting disabled (≤ 0), there is no hint and the round is that
+    shuffle join, which is equally correct.
+
+    Each round's checkpoint is released once its successor has
+    materialized, and the edge list on return, so a call leaves exactly
+    one checkpoint registered: the one the returned frame reads.
     """
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("bigint").alias("w"))
-    e = edges.select(*cols)
-    if weight_col is not None:
-        # fail fast on weights the update rule can't survive (see docstring)
-        bad = e.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).collect()
-        if bad:
-            raise ValueError(
-                f"pagerank weight_col={weight_col!r} must be positive and "
-                f"non-NULL; found {bad[0].asDict()}"
-            )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()  # bounded: ONE driver scalar, O(1) result
-    if n_nodes == 0:
-        return nodes.withColumn("rank_micro", F.lit(0).cast("bigint"))
-
-    if weight_col is not None:
-        deg = e.groupBy("src").agg(F.sum("w").cast("bigint").alias("deg"))
-    else:
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # corpus-sized state, reused every iteration — persist once
-    edges_deg = e.join(deg, "src").localCheckpoint(eager=True)
-
-    base = F.lit(
-        ((damping_den - damping_num) * scale) // (damping_den * n_nodes)
-    ).cast("bigint")
-    ranks = nodes.withColumn(
-        "rank_micro", F.lit(scale // n_nodes).cast("bigint")
-    ).localCheckpoint(eager=True)
-
-    contrib_expr = (
-        "(rank_micro * w) div deg" if weight_col is not None else "rank_micro div deg"
-    )
-    for _ in range(iters):
-        contrib = (
-            edges_deg.join(
-                ranks.select(F.col("id").alias("src"), "rank_micro"), "src"
-            )
-            .groupBy("dst")
-            .agg(F.sum(F.expr(contrib_expr)).cast("bigint").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
-            .select(
-                "id",
-                (
-                    base
-                    + F.expr(
-                        f"({damping_num} * coalesce(s, 0L)) div {damping_den}"
-                    )
+    spark = edges.sparkSession
+    sc = spark.sparkContext
+    # corpus-sized state, read every round — persist once
+    e = edges.select(*cols).localCheckpoint(eager=True)
+    try:
+        if weight_col is not None:
+            # fail fast on weights the update rule can't survive (see docstring)
+            bad = e.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).collect()
+            if bad:
+                raise ValueError(
+                    f"pagerank weight_col={weight_col!r} must be positive and "
+                    f"non-NULL; found {bad[0].asDict()}"
                 )
-                .cast("bigint")
-                .alias("rank_micro"),
-            )
+        out = F.col("w") if weight_col is not None else F.lit(1).cast("bigint")
+        nodes = (
+            e.select(F.col("src").alias("id"), out.alias("o"))
+            .unionByName(e.select(F.col("dst").alias("id"), F.lit(0).cast("bigint").alias("o")))
+            .groupBy("id")
+            .agg(F.sum("o").alias("deg"))
             .localCheckpoint(eager=True)
         )
-    return ranks
+        n_nodes = nodes.count()  # bounded: ONE driver scalar, O(1) result
+        if n_nodes == 0:
+            return nodes.select("id", F.lit(0).cast("bigint").alias("rank_micro"))
+
+        base = ((damping_den - damping_num) * scale) // (damping_den * n_nodes)
+        update = F.expr(f"CAST({base} + ({damping_num} * s) div {damping_den} AS BIGINT)")
+        contrib = F.expr(
+            "(rank_micro * w) div deg" if weight_col is not None else "rank_micro div deg"
+        )
+        bcast = _broadcast_fits(spark, n_nodes)
+        ranks = nodes.withColumn("rank_micro", F.lit(scale // n_nodes).cast("bigint"))
+        held = _checkpoint_rdd_ids(nodes)  # the checkpoint `ranks` reads
+        for _ in range(iters):
+            ranks = _pagerank_round(e, ranks, contrib, update, bcast).localCheckpoint(
+                eager=True
+            )
+            _release_rdds(sc, held)  # the superseded round (or the node table)
+            held = _checkpoint_rdd_ids(ranks)
+        return ranks.select("id", "rank_micro")
+    finally:
+        _release_rdds(sc, _checkpoint_rdd_ids(e))
 
 
 def pagerank_oracle_cte(

@@ -28,6 +28,7 @@ from ..operators.graph import (
     sssp_oracle_cte,
 )
 from ..operators.ranges import banded_range_join
+from ..session import shuffle_width
 from ..sources import load_table
 
 
@@ -1229,11 +1230,13 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical BY CONSTRUCTION: no float summation-order noise can
     accumulate across iterations.
 
-    Scale: the Pregel-style plan — edge list joined once with out-degrees
-    and checkpointed; each iteration ONE hash join edges⋈ranks on src
-    (ranks is O(nodes)) + ONE map-side-combined groupBy(dst) sum;
-    localCheckpoint per round truncates lineage (connected_components
-    precedent); driver state = one scalar (N)."""
+    Scale: the Pregel-style plan — the edge derivation (lineitem⋈orders,
+    distinct, union) runs once, into the checkpointed edge list;
+    out-degrees ride on the O(nodes) rank table; each iteration ONE hash
+    join edges⋈ranks on src (broadcast while N fits the broadcast
+    threshold — see ``operators.graph.pagerank``) + ONE map-side-combined
+    groupBy(dst) sum; localCheckpoint per round truncates lineage
+    (connected_components precedent); driver state = one scalar (N)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pairs = (
@@ -4604,19 +4607,12 @@ def q_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup's clustering, is preserved through the checkpoint, and is
     # reused by the customer-degree agg, the degree attach AND both pair
     # self-join sides — previously each of those planned its own shuffle.
-    # The explicit partition count (the cluster's shuffle knob) keeps AQE
+    # The explicit partition count (see session.shuffle_width) keeps AQE
     # from coalescing the tiny toy input below the fan-out's parallelism.
-    # ADVICE r18 #2: some vendor runtimes hold a non-numeric value (e.g.
-    # "auto") in this conf — fall back to defaultParallelism, never raise
-    # at plan time.
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_part = spark.sparkContext.defaultParallelism
     e = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .repartition(n_part, "c")
+        .repartition(shuffle_width(spark), "c")
         .dropDuplicates(["c", "s"])
         .localCheckpoint(eager=True)
     )

@@ -109,8 +109,11 @@ def get_spark(
 
 def shuffle_width(spark: SparkSession) -> int:
     """The session's declared shuffle width (``spark.sql.shuffle.partitions``),
-    falling back to ``defaultParallelism`` when the conf is non-numeric
-    (vendor runtimes hold e.g. "auto" — ADVICE r18 #2).
+    capped at ``4 × defaultParallelism``, and falling back to
+    ``defaultParallelism`` when the conf is non-numeric (vendor runtimes
+    hold e.g. "auto" — ADVICE r18 #2). The cap matters under a session we
+    did not create: Spark's stock 200 would otherwise pin every tiny
+    fan-out exchange at 200 tasks on a few cores.
 
     Used by the fan-out operators (PassJoin verify, LSH candidate verify) to
     PIN their pair-verify exchange: those exchanges carry a few MB of keys
@@ -119,10 +122,11 @@ def shuffle_width(spark: SparkSession) -> int:
     which otherwise collapses the stage to 1-3 tasks. Pinning at the
     declared shuffle width sizes with the deployment (the knob a cluster
     operator already tunes) instead of with fixture bytes."""
+    cores = spark.sparkContext.defaultParallelism
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return min(int(spark.conf.get("spark.sql.shuffle.partitions")), 4 * cores)
     except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
+        return cores
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` for named headline queries into
-plans/r19/<bench_name>_<suffix>.txt — the judge-facing before/after plan
-evidence for OPTIMIZATION_r19.md.
+plans/<round>/<bench_name>_<suffix>.txt — the before/after plan evidence
+for OPTIMIZATION_<round>.md.
 
-    PYTHONPATH=. python scripts/capture_plans_r19.py before fuzzy_join pagerank ...
-    PYTHONPATH=. python scripts/capture_plans_r19.py after  fuzzy_join ...
+    PYTHONPATH=. python scripts/capture_plans.py r19 before fuzzy_join pagerank ...
+    PYTHONPATH=. python scripts/capture_plans.py r19 after  fuzzy_join ...
 
 With no query names, captures every bench.HEADLINE row.
 """
@@ -23,11 +23,11 @@ from savio_training_dask_2019_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or list(HEADLINE)
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r19"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"capture-plans-{suffix}")
@@ -41,7 +41,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(
                 f"# {bench_name} ({qname}) — explain('formatted') at {sf_dir}, "
-                f"{suffix} r19 optimization\n"
+                f"{suffix} {rnd} optimization\n"
                 f"# shuffles={plans.shuffle_count(df)} "
                 f"broadcast_joins={plans.broadcast_join_count(df)} "
                 f"scans={plans.scan_count(df)} bnlj={plans.bnlj_count(df)}\n\n"

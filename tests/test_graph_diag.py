@@ -147,6 +147,126 @@ def test_pagerank_weighted_rejects_nonpositive_weights(spark):
             pr(df, iters=2, weight_col="w")
 
 
+def _null_edges(weighted):
+    """A random graph whose edge list holds NULL src and NULL dst ends."""
+    import random
+
+    rng = random.Random(11)
+    ids = [None] + list(range(25))
+    rows = [(rng.choice(ids), rng.choice(ids), rng.randint(1, 9)) for _ in range(150)]
+    return rows if weighted else [(a, b) for a, b, _ in rows]
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_pagerank_null_endpoints_match_duckdb_oracle(spark, weighted):
+    """NULL src/dst edges: the NULL node keeps its base rank, NULL-src edges
+    pass no mass and NULL-dst edges receive none — exactly as the chained-CTE
+    DuckDB twin computes it."""
+    import duckdb
+
+    from savio_training_dask_2019_spark.operators.graph import pagerank_oracle_cte
+
+    rows = _null_edges(weighted)
+    schema = "src BIGINT, dst BIGINT" + (", w BIGINT" if weighted else "")
+    df = spark.createDataFrame(rows, schema)
+    got = {
+        r["id"]: r["rank_micro"]
+        for r in pagerank(df, iters=5, weight_col="w" if weighted else None).collect()
+    }
+    cols = "src, dst, w" if weighted else "src, dst"
+    values = ", ".join(
+        "(" + ", ".join("NULL" if v is None else str(v) for v in row) + ")"
+        for row in rows
+    )
+    edges_sql = (
+        f"SELECT {', '.join(f'CAST({c} AS BIGINT) AS {c}' for c in cols.split(', '))}"
+        f" FROM (VALUES {values}) t({cols})"
+    )
+    con = duckdb.connect()
+    want = dict(
+        con.execute(pagerank_oracle_cte(edges_sql, iters=5, weighted=weighted)).fetchall()
+    )
+    con.close()
+    assert None in want
+    assert got == want
+
+
+def test_pagerank_without_broadcast_gives_same_ranks(spark):
+    """autoBroadcastJoinThreshold=-1 takes the shuffle-join branch of the
+    round; its ranks must equal the broadcast branch's."""
+    from savio_training_dask_2019_spark.operators.graph import _broadcast_fits
+
+    df = spark.createDataFrame(_null_edges(True), "src BIGINT, dst BIGINT, w BIGINT")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    results = {}
+    try:
+        for thr in ("10MB", "-1"):
+            spark.conf.set(key, thr)
+            results[_broadcast_fits(spark, 26)] = {
+                wc: sorted(map(tuple, pagerank(df, iters=4, weight_col=wc).collect()), key=str)
+                for wc in (None, "w")
+            }
+    finally:
+        spark.conf.set(key, old)
+    assert set(results) == {True, False}
+    assert results[True] == results[False]
+
+
+def test_pagerank_round_plans_broadcast_join(spark):
+    """Plan pin on one round's pre-AQE physical plan: with the count-based
+    hint the ranks side broadcasts and the edge list is never shuffled on
+    src. Without it, the checkpointed inputs' inflated size estimates make
+    the planner pick a sort-merge join that does shuffle the edge list."""
+    from savio_training_dask_2019_spark.operators.graph import (
+        _broadcast_fits,
+        _pagerank_round,
+    )
+
+    e = spark.createDataFrame(_sym([(i, (i * 7 + 3) % 50) for i in range(50)]), ["src", "dst"])
+    edges = e.localCheckpoint(eager=True)
+    # a projection over a real round checkpoint, estimates and all
+    ranks = pagerank(e, iters=1).withColumn("deg", F.lit(2).cast("bigint"))
+    assert _broadcast_fits(spark, ranks.count())
+
+    def plan(bcast):
+        r = _pagerank_round(edges, ranks, F.expr("rank_micro div deg"), F.col("s"), bcast)
+        return r._jdf.queryExecution().executedPlan().toString()
+
+    hinted = plan(True)
+    assert "BroadcastHashJoin" in hinted
+    assert "Exchange hashpartitioning(src" not in hinted
+    assert hinted.count("Exchange hashpartitioning(") == 1  # the groupBy(dst) only
+    assert "Exchange hashpartitioning(src" in plan(False)
+
+
+def test_pagerank_leaves_one_checkpoint_registered(spark):
+    """Superseded rounds, the node set and the edge list are released: a
+    call grows the persistent-RDD registry by exactly the checkpoint the
+    returned frame reads — also on the empty-graph early return. A
+    caller's lazily persisted input, first materialized inside the call,
+    is the caller's and stays registered."""
+    sc = spark.sparkContext
+
+    def registered():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    df = spark.createDataFrame(_sym([(i, (i * 3) % 17) for i in range(17)]), ["src", "dst"])
+    empty = spark.createDataFrame([], "src BIGINT, dst BIGINT")
+    for edges, iters in ((df, 6), (df, 0), (empty, 3)):
+        before = registered()
+        out = pagerank(edges, iters=iters)
+        assert len(registered() - before) == 1
+        out.collect()  # the kept checkpoint still serves the result
+    cached = df.select("src", "dst").persist()
+    try:
+        before = registered()
+        pagerank(cached, iters=3)
+        assert len(registered() - before) == 2  # the caller's cache + the result
+    finally:
+        cached.unpersist()
+
+
 # --- outlier_mad -------------------------------------------------------------
 
 

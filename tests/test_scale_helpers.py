@@ -106,3 +106,21 @@ def test_bucketed_join_has_no_join_shuffle(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {t1}")
         spark.sql(f"DROP TABLE IF EXISTS {t2}")
+
+
+def test_shuffle_width_caps_external_session_default(spark):
+    """A session we did not create may hold Spark's stock 200: the
+    fan-out pin width is capped at 4 × defaultParallelism, and a smaller
+    declared width is kept as it is."""
+    from savio_training_dask_2019_spark.session import shuffle_width
+
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        assert shuffle_width(spark) == min(200, 4 * cores)
+        spark.conf.set(key, "2")
+        assert shuffle_width(spark) == 2
+    finally:
+        spark.conf.set(key, old)
