@@ -7,7 +7,7 @@ composition the similarity tier exists for (SCALING.md "r9 additions"):
 Stages, each the 100 TB shape:
 
   1. quantizer sanity   — `assign_cells` + occupancy/skew diagnostic (the
-                          ivf_balance check): one narrow broadcast fold +
+                          ivf_balance check): one narrow Arrow kernel +
                           one groupBy(cell). Run BEFORE committing to any
                           cell-partitioned join; skew_ratio tells you
                           whether nlist is big enough.

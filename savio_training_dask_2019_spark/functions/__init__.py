@@ -1,5 +1,6 @@
 """Column-expression libraries — pure ``pyspark.sql.functions`` compositions
-(JVM-side, codegen-friendly; no Python UDFs in this package).
+(JVM-side; no Python UDFs in this package), plus ``vectors.fold_dot``, the
+numpy twin of the dot-product fold that the operators' Arrow kernels use.
 
 These cover the dask.array vector surface (SURVEY.md §2.9) and the text
 analysis extensions (§2.12) as reusable expressions.

@@ -678,6 +678,65 @@ def embedding_near_dup_pairs(
     raise ValueError(f"unknown method {method!r}; use 'brute', 'lsh', or 'rp'")
 
 
+# Byte budget of one (block rows × cluster rows) float64 tile in the
+# semantic_dedup kernel; a handful of such tiles are live at once. A fixed
+# constant, not an option: a dense 1e5-row cluster matrix would be 80 GB.
+_PAIR_TILE_BYTES = 16 << 20
+
+
+def _best_earlier_cosine(key, table):
+    """``semantic_dedup``'s per-cluster kernel (``applyInArrow``): for each
+    row of one cluster, the LARGEST unrounded cosine to a row of the same
+    cluster with a smaller id; only rows that have such a pair are
+    returned, as ``(__id, __best)``. Cosines follow the exact-order rule of
+    ``functions/vectors.py``, so they are the Spark fold's bits. Rows are
+    ranked by id (Arrow's ordering: Spark's for numbers and strings),
+    sorted, and scored in tiles of ``_PAIR_TILE_BYTES`` against the prefix
+    that can hold their earlier rows. A pair whose norm product is 0 has no
+    cosine (0/0): raise, naming the cluster and the zero-norm id, where
+    numpy would return a NaN that Spark's ordering ranks above every
+    threshold."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..functions.vectors import fold_dot, rows_by_length
+
+    ids = table.column("__id").combine_chunks()
+    rank = pc.rank(ids, sort_keys="ascending", tiebreaker="min").to_numpy()
+    keep_rows, keep_best = [], []
+    for rows, x in rows_by_length(table.column("__v")):
+        order = np.argsort(rank[rows], kind="stable")
+        rows, x = rows[order], x[order]
+        r = rank[rows]
+        norm = np.sqrt(fold_dot(x, x))
+        step = max(1, _PAIR_TILE_BYTES // (8 * len(rows)))
+        for i0 in range(0, len(rows), step):
+            i1 = min(i0 + step, len(rows))
+            earlier = r[i0:i1, None] > r[None, :i1]
+            den = norm[i0:i1, None] * norm[None, :i1]
+            zero = np.argwhere(earlier & (den == 0))
+            if len(zero):
+                i, j = zero[0][0] + i0, zero[0][1]
+                bad = [ids[rows[t]].as_py() for t in (i, j) if norm[t] == 0] or [
+                    ids[rows[t]].as_py() for t in (i, j)  # the product underflowed
+                ]
+                raise ValueError(
+                    f"semantic_dedup: cluster {key[0].as_py()!r}: id "
+                    f"{bad[0] if len(bad) == 1 else bad!r} has a zero-norm "
+                    "vector, so its cosine to another row of the cluster is "
+                    "0/0. Drop or repair zero vectors before deduplicating."
+                )
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = fold_dot(x[i0:i1, None], x[None, :i1]) / den
+            has = earlier.any(axis=1)
+            keep_rows.append(rows[i0:i1][has])
+            keep_best.append(np.where(earlier, cos, -np.inf).max(axis=1)[has])
+    keep = np.concatenate(keep_rows) if keep_rows else np.zeros(0, np.int64)
+    best = np.concatenate(keep_best) if keep_best else np.zeros(0)
+    return pa.table({"__id": ids.take(pa.array(keep, pa.int64())), "__best": best})
+
+
 def semantic_dedup(
     df: DataFrame,
     vec_col: str,
@@ -698,12 +757,21 @@ def semantic_dedup(
     topic/label column, or any partitioner that puts semantic neighbors
     together. Pairwise comparison happens ONLY within a cluster, so the
     quadratic term is bounded by the largest cluster, not the corpus —
-    choose k so clusters stay ~1e3-1e4 rows at 100 TB. Plan: one shuffle of
-    each side keyed on (cluster), the within-cluster self-join, then a
-    hash-keyed anti-join back; nothing global, no window.
+    choose k so clusters stay ~1e3-1e4 rows at 100 TB. Plan: one shuffle
+    keyed on (cluster), then ONE Arrow kernel per cluster
+    (``groupBy(cluster).applyInArrow``, :func:`_best_earlier_cosine`) that
+    returns each row's best unrounded cosine to an earlier row — scored by
+    ``functions.vectors.fold_dot``, the fold's exact order, so the bits
+    are the fold's — then a hash-keyed anti-join back; no self-join, no
+    pair-level rows, nothing global, no window. ``round`` is monotone, so
+    ``round(best, 5) >= min_cosine`` (a Spark expression: Spark rounds
+    HALF_UP) holds exactly when some earlier row passes. Rows with a NULL
+    cluster, id or vector, a NULL component, or a length no earlier row
+    shares, never pair — the self-join's NULL semantics — so they survive.
+    A zero-norm vector that would pair raises (see the kernel).
 
     The "choose k wisely" contract is machine-enforced (VERDICT r8 #4):
-    before the pairwise join runs, the largest cluster is counted (one
+    before the pairwise kernel runs, the largest cluster is counted (one
     narrow aggregation, 1-row collect) and a cluster above
     ``max_cluster_rows`` (default 1e5 — an order of magnitude past the
     recommended ceiling, i.e. ~1e10 pairs in ONE cluster) raises
@@ -723,25 +791,21 @@ def semantic_dedup(
     chosen deliberately: it is deterministic, order-stable under any
     partitioning, and exactly SQL-expressible — the oracle twin is a plain
     EXISTS — where greedy keep-first is inherently sequential per cluster."""
-    from ..functions.vectors import as_double, dot, l2_norm
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    # Norms are computed ONCE per row before the pair join; per pair only the
-    # dot product remains (1/3 of the flops of a full cosine per pair, which
-    # dominates Σ|cluster|² cost). dot/(n_a·n_b) evaluates the exact same
-    # arithmetic as cosine_similarity(a, b) — same folds over the same
-    # arrays — so results are bit-for-bit unchanged vs the naive form.
+    from ..functions.vectors import as_double
+
+    # NULL clusters never pair (and the guard must not count them: they
+    # cannot create quadratic work, so counting them would abort on valid
+    # input); NULL ids are never "earlier" or "later" than anything
     v = df.select(
         F.col(cluster_col).alias("__c"),
         F.col(id_col).alias("__id"),
         as_double(F.col(vec_col)).alias("__v"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
+    ).where(F.col("__c").isNotNull())
     if max_cluster_rows is not None:
-        # NULL clusters are excluded: a NULL key never matches the pairwise
-        # equi-join below, so those rows cannot create quadratic work (they
-        # always survive) — counting them would abort on valid input
         worst = (
-            v.where(F.col("__c").isNotNull())
-            .groupBy("__c")
+            v.groupBy("__c")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.col("n").desc(), F.col("__c"))
             .limit(1)
@@ -756,18 +820,18 @@ def semantic_dedup(
                 "cluster), or fall back to near_duplicates(method='rp'), or "
                 "pass max_cluster_rows=None to override."
             )
-    a, b = v.alias("a"), v.alias("b")
-    dup_ids = (
-        a.join(b, (F.col("a.__c") == F.col("b.__c")) & (F.col("a.__id") > F.col("b.__id")))
-        .where(
-            F.round(
-                dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.__n") * F.col("b.__n")),
-                5,
-            )
-            >= F.lit(min_cosine)
+    best = (
+        v.where(F.col("__id").isNotNull())
+        .groupBy("__c")
+        .applyInArrow(
+            _best_earlier_cosine,
+            StructType(
+                [v.schema["__id"], StructField("__best", DoubleType())]
+            ),
         )
-        .select(F.col("a.__id").alias("__dup_id"))
-        .distinct()
+    )
+    dup_ids = best.where(F.round("__best", 5) >= F.lit(min_cosine)).select(
+        F.col("__id").alias("__dup_id")
     )
     return df.join(
         dup_ids, df[id_col] == dup_ids["__dup_id"], "left_anti"

@@ -348,33 +348,46 @@ def bfs_hops(
     pattern): per hop ONE hash join frontier⋈edges on ``src`` + distinct
     + ONE left-anti join against the visited set, localCheckpoint per
     round (frontiers are O(reachable) and lineage must not stack). The
-    edge list is checkpointed once — it is read every hop. Empty
-    frontiers make remaining hops cheap no-ops (no driver branching, so
-    the loop is deterministic in plan count)."""
+    edge list is checkpointed once — it is read every hop. Superseded
+    frontiers and visited sets, and the edge list, are released once
+    their successors have materialized, so a call leaves one checkpoint
+    registered (the returned frame's). Empty frontiers make remaining hops
+    cheap no-ops (no driver branching, so the loop is deterministic in
+    plan count)."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
+    sc = edges.sparkSession.sparkContext
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    visited = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("id")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"))
+    try:
+        visited = (
+            seeds.select(F.col(id_col).alias("id"))
             .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .withColumn("hops", F.lit(h).cast("int"))
+            .withColumn("hops", F.lit(0).cast("int"))
             .localCheckpoint(eager=True)
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("id")
-    return visited
+        frontier, nxt = visited.select("id"), None
+        for h in range(1, max_hops + 1):
+            held = _checkpoint_rdd_ids(visited)
+            if nxt is not None:
+                held |= _checkpoint_rdd_ids(nxt)  # the old frontier
+            nxt = (
+                frontier.join(e, frontier["id"] == e["src"])
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(visited.select("id"), "id", "left_anti")
+                .withColumn("hops", F.lit(h).cast("int"))
+                .localCheckpoint(eager=True)
+            )
+            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+            _release_rdds(sc, held)
+            frontier = nxt.select("id")
+        if nxt is not None:
+            _release_rdds(sc, _checkpoint_rdd_ids(nxt))
+        return visited
+    finally:
+        _release_rdds(sc, _checkpoint_rdd_ids(e))
 
 
 def bfs_oracle_cte(
@@ -430,35 +443,43 @@ def sssp_bounded(
     Scale (the Pregel discipline shared with pagerank/bfs_hops): per
     round ONE dist⋈edges hash join + one map-side-combinable min-groupBy
     over (|dist| + |relaxed|) rows, localCheckpoint per round so lineage
-    never stacks; the edge list is checkpointed once. Distances carry
+    never stacks; the edge list is checkpointed once, and it and every
+    superseded round are released (one checkpoint stays registered: the
+    result's). Distances carry
     (id, cost) longs only — never paths. Negative weights are allowed
     by the algebra (it is Bellman-Ford) but rounds must then reach the
     longest useful path length; with non-negative weights ``rounds`` =
     graph diameter recovers full Dijkstra semantics."""
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
+    sc = edges.sparkSession.sparkContext
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(weight).alias("w"),
     ).localCheckpoint(eager=True)
-    dist = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        relaxed = dist.join(e, dist["id"] == e["src"]).select(
-            F.col("dst").alias("id"), (dist["cost"] + e["w"]).alias("cost")
-        )
+    try:
         dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("cost").alias("cost"))
+            seeds.select(F.col(id_col).alias("id"))
+            .distinct()
+            .withColumn("cost", F.lit(0).cast("long"))
             .localCheckpoint(eager=True)
         )
-    return dist
+        for _ in range(rounds):
+            relaxed = dist.join(e, dist["id"] == e["src"]).select(
+                F.col("dst").alias("id"), (dist["cost"] + e["w"]).alias("cost")
+            )
+            held = _checkpoint_rdd_ids(dist)
+            dist = (
+                dist.unionByName(relaxed)
+                .groupBy("id")
+                .agg(F.min("cost").alias("cost"))
+                .localCheckpoint(eager=True)
+            )
+            _release_rdds(sc, held)  # the superseded round
+        return dist
+    finally:
+        _release_rdds(sc, _checkpoint_rdd_ids(e))
 
 
 def sssp_oracle_cte(
@@ -592,34 +613,42 @@ def label_propagation(
     ``edges ⋈ labels`` on dst + TWO map-side-combinable aggs (the
     (id, lbl) count, then the per-id argmax via a struct max — no window,
     so no per-node sort), localCheckpoint per round so lineage never
-    stacks; labels is O(nodes), edges the only corpus-sized state."""
+    stacks; labels is O(nodes), edges the only corpus-sized state.
+    Superseded rounds and the edge list are released, so a call leaves
+    one checkpoint registered (the result's)."""
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
+    sc = edges.sparkSession.sparkContext
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        nbr = e.join(labels, e["dst"] == labels["id"]).select(
-            e["src"].alias("nid"), "lbl"
-        )
-        counts = nbr.groupBy("nid", "lbl").agg(F.count(F.lit(1)).alias("cnt"))
+    try:
         labels = (
-            counts.groupBy("nid")
-            .agg(
-                F.max(
-                    F.struct(F.col("cnt"), (-F.col("lbl")).alias("neg"))
-                ).alias("m")
-            )
-            .select(F.col("nid").alias("id"), (-F.col("m.neg")).alias("lbl"))
+            e.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("lbl"))
             .localCheckpoint(eager=True)
         )
-    return labels
+        for _ in range(rounds):
+            nbr = e.join(labels, e["dst"] == labels["id"]).select(
+                e["src"].alias("nid"), "lbl"
+            )
+            counts = nbr.groupBy("nid", "lbl").agg(F.count(F.lit(1)).alias("cnt"))
+            held = _checkpoint_rdd_ids(labels)
+            labels = (
+                counts.groupBy("nid")
+                .agg(
+                    F.max(
+                        F.struct(F.col("cnt"), (-F.col("lbl")).alias("neg"))
+                    ).alias("m")
+                )
+                .select(F.col("nid").alias("id"), (-F.col("m.neg")).alias("lbl"))
+                .localCheckpoint(eager=True)
+            )
+            _release_rdds(sc, held)  # the superseded round
+        return labels
+    finally:
+        _release_rdds(sc, _checkpoint_rdd_ids(e))
 
 
 def lpa_oracle_cte(

@@ -15,8 +15,12 @@ SURVEY.md §2.12).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark import Broadcast
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from ..functions.vectors import as_double, cosine_similarity, dot, l2_norm, l2_normalize
 
@@ -265,46 +269,109 @@ def ivf_knn(
 _NORM_FLOOR = 1e-12  # zero-norm clamp: cosine vs anything becomes 0, not NULL
 
 
-def _cell_sims(vec, vn, cents):
-    """array<struct(s, negcid)> of rounded cosine vs every centroid, with
-    both norms PRECOMPUTED (``vn`` = the row's norm as a column computed
-    once, ``c.cn`` = each centroid's norm baked into the broadcast array)
-    — recomputing them inside the fold costs ~2× the assignment flops.
-    ``dot/(vn*cn)`` is cosine bit-for-bit for any nonzero vector; norms
-    are clamped to ``_NORM_FLOOR`` by the caller so an all-zero vector
-    scores cosine 0.0 against everything (and takes the smallest-cid cell
-    by the tie rule) instead of propagating NULL and silently vanishing
-    (ADVICE r8).
+class _CentroidModel(NamedTuple):
+    """A (cid, ce) centroid model collected to the driver: ``negcids`` is
+    the ``-cid`` array literal in cid order, and ``blocks`` broadcasts, per
+    vector length, the centroid positions, their float64 matrix and their
+    clamped norms."""
+
+    negcids: Column
+    blocks: Broadcast
+
+
+def _centroid_model(centroids: DataFrame) -> _CentroidModel:
+    """Collect the O(nlist) centroid model — the same bytes the former
+    broadcast-exchange attach brought to the driver — sort it by cid and
+    ship it with ``sc.broadcast`` (the k-means and PQ-codebook precedent).
+    Norms are ``max(sqrt(fold_dot(c, c)), _NORM_FLOOR)``, the bits
+    ``greatest(l2_norm(ce), _NORM_FLOOR)`` gives."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..functions.vectors import fold_dot, rows_by_length
+
+    rows = centroids.select("cid", "ce").collect()  # bounded: the model
+    rows.sort(key=lambda r: (r["cid"] is not None, r["cid"]))
+    ce = pa.array([r["ce"] for r in rows], pa.list_(pa.float64()))
+    blocks = [
+        (pos, c, np.maximum(np.sqrt(fold_dot(c, c)), _NORM_FLOOR))
+        for pos, c in rows_by_length(ce)
+    ]
+    cid_type = centroids.schema["cid"].dataType
+    return _CentroidModel(
+        F.lit([None if r["cid"] is None else -r["cid"] for r in rows]).cast(
+            ArrayType(cid_type)
+        ),
+        centroids.sparkSession.sparkContext.broadcast((len(rows), blocks)),
+    )
+
+
+def _score_cells(df: DataFrame, vec: str, model: _CentroidModel) -> DataFrame:
+    """Append ``n`` (the row's clamped norm) and ``sims`` (the UNROUNDED
+    cosine to every centroid, in cid order) in ONE narrow ``mapInArrow``
+    kernel — per-row folds over nlist centroids were the assignment's whole
+    cost, evaluated interpreted. Exact-order rule of ``functions/vectors``:
+    ``sims`` are the bits of ``dot(v, ce) / (n * cn)``. A pair the fold
+    scores NULL (NULL vector or component, unequal lengths) is NULL here;
+    a row with no norm (NULL vector or component) takes ``_NORM_FLOOR``,
+    as ``greatest`` skips the NULL."""
+    blocks = model.blocks
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from ..functions.vectors import fold_dot, rows_by_length
+
+        nlist, cents = blocks.value
+        for batch in batches:
+            m = batch.num_rows
+            norm = np.full(m, _NORM_FLOOR)
+            sims = np.zeros((m, nlist))
+            valid = np.zeros((m, nlist), dtype=bool)
+            for rows, x in rows_by_length(batch.column(vec)):
+                n = np.maximum(np.sqrt(fold_dot(x, x)), _NORM_FLOOR)
+                norm[rows] = n
+                for pos, c, cn in cents:
+                    if c.shape[1] == x.shape[1]:
+                        sims[np.ix_(rows, pos)] = fold_dot(x[:, None], c[None]) / (
+                            n[:, None] * cn[None]
+                        )
+                        valid[np.ix_(rows, pos)] = True
+            yield pa.RecordBatch.from_arrays(
+                batch.columns
+                + [
+                    pa.array(norm),
+                    pa.ListArray.from_arrays(
+                        pa.array(np.arange(m + 1, dtype=np.int32) * nlist),
+                        pa.array(sims.reshape(-1), mask=~valid.reshape(-1)),
+                    ),
+                ],
+                batch.schema.names + ["n", "sims"],
+            )
+
+    out = StructType(
+        df.schema.fields
+        + [StructField("n", DoubleType()), StructField("sims", ArrayType(DoubleType()))]
+    )
+    return df.mapInArrow(kernel, out)
+
+
+def _cell_sims(sims, negcids):
+    """array<struct(s, negcid)>: each centroid's cosine (``sims``, from
+    :func:`_score_cells`) rounded to 5 places by Spark, paired with -cid.
+    Norms are clamped to ``_NORM_FLOOR``, so an all-zero vector scores
+    cosine 0.0 against everything (and takes the smallest-cid cell by the
+    tie rule) instead of propagating NULL and silently vanishing (ADVICE
+    r8).
 
     ``negcid`` (= -cid) makes struct ordering break similarity ties toward
     the SMALLEST centroid id under both ``array_max`` and descending sort —
     the deterministic tie rule every oracle twin can replicate."""
-    return F.transform(
-        cents,
-        lambda c: F.struct(
-            F.round(dot(vec, c["ce"]) / (vn * c["cn"]), 5).alias("s"),
-            (-c["cid"]).alias("negcid"),
-        ),
-    )
-
-
-def _centroid_array(centroids: DataFrame):
-    """Fold the (cid, ce) centroid model — O(nlist) rows — into ONE sorted
-    array row (with each centroid's clamped norm baked in) and mark it for
-    broadcast: both fact sides of a cell join consume the same tiny build
-    side, so neither ever shuffles for the assignment."""
-    return F.broadcast(
-        centroids.select(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("cid"),
-                        F.col("ce"),
-                        F.greatest(l2_norm(F.col("ce")), F.lit(_NORM_FLOOR)).alias("cn"),
-                    )
-                )
-            ).alias("cents")
-        )
+    return F.zip_with(
+        sims,
+        negcids,
+        lambda s, nc: F.struct(F.round(s, 5).alias("s"), nc.alias("negcid")),
     )
 
 
@@ -313,28 +380,30 @@ def assign_cells(
     vec_col: str,
     id_col: str,
     centroids: DataFrame,
-    _cent_arr: DataFrame | None = None,
+    _model: _CentroidModel | None = None,
 ) -> DataFrame:
-    """Argmax-cosine cell assignment as a NARROW per-row fold over the
-    broadcast centroid array — the corpus side of :func:`cell_knn_join`,
-    exposed for occupancy diagnostics (``q_ivf_balance``) and custom cell
-    pipelines. Returns (id, v double-vector, n clamped-l2-norm, cell);
-    ties break to the smallest cid, zero-norm rows take cosine 0.0
-    everywhere and land in the smallest-cid cell. No shuffle.
+    """Argmax-cosine cell assignment as a NARROW per-batch kernel against
+    the broadcast centroid model (:func:`_score_cells`) — the corpus side
+    of :func:`cell_knn_join`, exposed for occupancy diagnostics
+    (``q_ivf_balance``) and custom cell pipelines. Returns (id, v
+    double-vector, n clamped-l2-norm, cell); ties break to the smallest
+    cid, zero-norm rows take cosine 0.0 everywhere and land in the
+    smallest-cid cell. No shuffle; the model is collected once, at build.
 
-    ``_cent_arr``: a prebuilt :func:`_centroid_array` frame — pass it when
-    ANOTHER consumer attaches the same model (``cell_knn_join``'s query
-    side) so the O(nlist) build aggregation runs once and Catalyst can
-    reuse the broadcast exchange instead of planning two (r9 review)."""
-    cent_arr = _centroid_array(centroids) if _cent_arr is None else _cent_arr
-    return (
-        df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("n", F.greatest(l2_norm(F.col("v")), F.lit(_NORM_FLOOR)))
-        .crossJoin(cent_arr)
-        .withColumn(
-            "best", F.array_max(_cell_sims(F.col("v"), F.col("n"), F.col("cents")))
-        )
-        .select("id", "v", "n", (-F.col("best.negcid")).alias("cell"))
+    ``_model``: a prebuilt :func:`_centroid_model` — pass it when ANOTHER
+    consumer uses the same model (``cell_knn_join``'s query side) so it is
+    collected and broadcast once."""
+    model = _centroid_model(centroids) if _model is None else _model
+    scored = _score_cells(
+        df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")),
+        "v",
+        model,
+    )
+    return scored.select(
+        "id",
+        "v",
+        "n",
+        (-F.array_max(_cell_sims(F.col("sims"), model.negcids))["negcid"]).alias("cell"),
     )
 
 
@@ -354,10 +423,13 @@ def cell_knn_join(
     batch) and :func:`ivf_query` (one driver-side probe) cannot cover.
 
     Mechanics: ``centroids`` (cid, ce double-vector — the model, O(nlist)
-    rows) is folded into ONE sorted array row and broadcast to both fact
-    sides; cell assignment is then a narrow per-row fold — corpus rows take
-    their argmax-cosine cell, query rows explode into their top-``nprobe``
-    cells (ties break to the smallest cid via the negcid struct trick).
+    rows) is collected once at build and broadcast to both fact sides
+    (:func:`_centroid_model`); cell assignment is then a narrow Arrow
+    kernel per batch (:func:`_score_cells`, exact fold order) plus the
+    rounding and tie rule in Spark — corpus rows take their argmax-cosine
+    cell, query rows explode into their top-``nprobe`` cells (ties break
+    to the smallest cid via the negcid struct trick). The post-join pair
+    scores (Σ|cell|·|probes(cell)|, far fewer) stay on the JVM fold.
     Probes ⋈ corpus is a plain equi join ON THE CELL ID, hinted
     ``shuffle_hash`` so Catalyst never broadcasts a fact side; scoring
     happens only within probed cells (Σ|cell|·|probes(cell)| pairs, never
@@ -376,34 +448,34 @@ def cell_knn_join(
     and stays in the result set rather than vanishing as NULL (ADVICE r8).
     Returns (query_id, corpus_id, cosine round 5), top-k per query by
     (cosine desc, corpus_id)."""
-    cent_arr = _centroid_array(centroids)
-    c = assign_cells(corpus, vec_col, id_col, centroids, _cent_arr=cent_arr).select(
+    model = _centroid_model(centroids)
+    c = assign_cells(corpus, vec_col, id_col, centroids, _model=model).select(
         F.col("id").alias("corpus_id"),
         F.col("v").alias("cvec"),
         F.col("n").alias("cn"),
         "cell",
     )
     q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qvec")
+        _score_cells(
+            queries.select(
+                F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qvec")
+            ),
+            "qvec",
+            model,
         )
-        .withColumn("qn", F.greatest(l2_norm(F.col("qvec")), F.lit(_NORM_FLOOR)))
-        .crossJoin(cent_arr)
         .withColumn(
             "probe",
             F.explode(
                 F.slice(
-                    F.reverse(
-                        F.array_sort(
-                            _cell_sims(F.col("qvec"), F.col("qn"), F.col("cents"))
-                        )
-                    ),
+                    F.reverse(F.array_sort(_cell_sims(F.col("sims"), model.negcids))),
                     1,
                     nprobe,
                 )
             ),
         )
-        .select("query_id", "qvec", "qn", (-F.col("probe.negcid")).alias("cell"))
+        .select(
+            "query_id", "qvec", F.col("n").alias("qn"), (-F.col("probe.negcid")).alias("cell")
+        )
     )
     pairs = q.join(c.hint("shuffle_hash"), "cell")
     if exclude_self:
@@ -805,7 +877,7 @@ def ivfpq_topk(
     quantizer prune + PQ asymmetric distance within the probed cells:
 
       1. corpus rows are cell-assigned (:func:`assign_cells`, narrow
-         broadcast fold) and PQ-encoded (:func:`pq_encode`) — at scale
+         Arrow kernel) and PQ-encoded (:func:`pq_encode`) — at scale
          BOTH are done once at ingest and stored ``partitionBy(cell)``
          with the codes, so a query reads only its probed cells' codes;
       2. the query's top-``nprobe`` cells are chosen driver-side against

@@ -339,8 +339,9 @@ def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided IVF cell-join k-NN — the corpus×corpus scale path where
     the query set is TOO BIG to broadcast (``knn_join``'s model) and too
     numerous for per-query driver probes (``knn_ivf``'s model): probe rows
-    and corpus rows are both assigned to centroid cells by a narrow fold
-    over ONE broadcast centroid array, then joined cell ⋈ cell with a
+    and corpus rows are both assigned to centroid cells by a narrow Arrow
+    kernel against ONE broadcast centroid model, then joined cell ⋈ cell
+    with a
     shuffle_hash hint so neither fact side ever broadcasts (plan-pinned).
     Exact within the probed cells, and fully oracle-checkable because the
     demo centroids are a deterministic corpus subset (vec_id % 31 == 0)
@@ -669,7 +670,8 @@ def q_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell ⋈ cell join needs AQE's skew split (tests/test_skew.py pins that
     it fires) or a bigger nlist.
 
-    Scale: one narrow broadcast-fold assignment (no shuffle), one
+    Scale: one narrow assignment kernel (no shuffle; the centroid model
+    is collected at build and broadcast as a variable), one
     groupBy(cell) count (map-side combine), one O(n_cells) final agg to a
     single row. This is the cheapest possible look at the quantizer before
     committing to a corpus×corpus join."""

@@ -267,6 +267,26 @@ def test_pagerank_leaves_one_checkpoint_registered(spark):
         cached.unpersist()
 
 
+@pytest.mark.parametrize("query", ["reachable_nodes", "sssp_bounded", "lpa_communities"])
+def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
+    """bfs_hops, sssp_bounded and label_propagation release every round
+    their successor superseded, and the edge list, as pagerank does:
+    building the catalog query (the loops run eagerly) grows the
+    persistent-RDD registry by at most the one checkpoint the result
+    reads, and the result still collects from it."""
+    from savio_training_dask_2019_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+
+    def registered():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = registered()
+    out = QUERIES[query](spark, sf_dir)
+    assert len(registered() - before) <= 1
+    assert out.count() > 0
+
+
 # --- outlier_mad -------------------------------------------------------------
 
 

@@ -446,28 +446,33 @@ def test_semantic_dedup_mega_cluster_guard(spark):
 
 
 def test_semantic_dedup_plan_has_no_cartesian(spark, sf_dir):
-    """The pairwise stage must be a cluster-keyed equi-join (hash/sort-merge
-    on the cluster column), never a CartesianProduct / nested-loop over the
-    corpus — that is the whole SemDeDup scaling argument."""
+    """The pairwise stage must be cluster-scoped: ONE per-cluster Arrow
+    kernel (FlatMapGroupsInArrow) fed by an Exchange hashpartitioning on
+    the cluster column, never a CartesianProduct / nested-loop over the
+    corpus — that is the whole SemDeDup scaling argument. The kernel
+    replaced the cluster-keyed self-join, so no join of the frame with
+    itself may come back. semantic_dedup aliases the cluster column to
+    __c."""
+    import re
+
     from savio_training_dask_2019_spark import plans
     from savio_training_dask_2019_spark.queries import QUERIES
 
     plan = plans.formatted_plan(QUERIES["semdedup_clusters"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # ...and the pairwise stage must be EQUI-keyed on the cluster column on
-    # BOTH sides (a cosine-only or id-only condition would still plan as a
-    # hash join if some other equi key existed, silently going quadratic on
-    # the corpus). semantic_dedup aliases the cluster column to __c.
-    import re
-
-    cluster_keyed_inner = any(
-        "Join type: Inner" in block
-        and re.search(r"Left keys \[\d+\]: \[.*__c#", block)
-        and re.search(r"Right keys \[\d+\]: \[.*__c#", block)
-        for block in plan.split("\n\n")
+    tree = plan.split("\n\n")[0]
+    # the kernel, its group sort, then the cluster-keyed exchange
+    m = re.search(
+        r"FlatMapGroupsInArrow \(\d+\)\n.*Sort \(\d+\)\n.*Exchange \((\d+)\)", tree
     )
-    assert cluster_keyed_inner, "pairwise self-join lost its cluster equi-key"
+    assert m, tree
+    exch = re.search(rf"\({m.group(1)}\) Exchange\n.*\nArguments: (.*)", plan)
+    assert exch and re.match(r"hashpartitioning\(__c#\d+", exch.group(1)), exch
+    assert len(re.findall(r"^\(\d+\) FlatMapGroupsInArrow", plan, re.M)) == 1
+    # the only joins left: the dup-id anti-join and the count attach
+    joins = re.findall(r"Join type: (\w+)", plan)
+    assert sorted(joins) == ["LeftAnti", "LeftOuter"], joins
 
 
 def test_semantic_dedup_over_kmeans_assignment(spark, sf_dir):

@@ -186,23 +186,25 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     "passage_dedup": (1, 0, 0, 3, (0, 0)),  # chunk-hash keep-first + agg
     "unigram_logprob": (2, 2, 2, 7, (3, 3)),  # 2 × broadcast 1-row total; model broadcast
     "bigram_logprob": (2, 1, 1, 7, (3, 3)),
-    # r18: +4 — the corpus spread exchange (load_table_spread) replans in
-    # each consuming branch of the static plan (pair join both sides,
-    # guard count, totals); AQE reuses one exchange at runtime. The
-    # within-cluster scoring otherwise ran on the fixture's single scan
-    # partition (measured 2.8 s → 1.65 s).
-    "semdedup_clusters": (4, 0, 0, 8, (2, 2)),
+    # the corpus spread exchange (load_table_spread) replans in each
+    # consuming branch of the static plan (kernel input, anti-join side,
+    # totals); AQE reuses one exchange at runtime. The within-cluster
+    # scoring is ONE hashpartitioning(__c) exchange feeding the per-cluster
+    # Arrow kernel (no self-join); the 2 broadcasts are the dup-id anti-join
+    # and the kept-count attach.
+    "semdedup_clusters": (3, 0, 0, 6, (2, 2)),
     # r7/r8 heavy tier, first benched r9 (VERDICT r8 #3). BNLJ/single-part
     # allowances are the documented 1-row broadcast crossJoins (centroid
     # array, corpus totals, fitted-model rows) already in the catalog
     # BNLJ allowlist below — never a fact-side nested loop.
     "substring_dup_stats": (2, 0, 0, 8, (1, 1)),
     "substring_rebuild": (3, 0, 0, 5, (2, 2)),
-    # r18: max_shuffles 5 → 9 — the corpus spread exchange (load_table_spread)
-    # replans under each static branch (corpus assign, query assign, centroid
-    # subtree ×2); AQE reuses one at runtime. Assignment fold measured
-    # 1-task 0.95 s → parallel; bench row 2.4 s → 1.65 s.
-    "knn_cells": (4, 2, 2, 9, (2, 2)),  # 2× broadcast centroid-array fold
+    # the corpus spread exchange (load_table_spread) under each fact branch
+    # (corpus assign, query assign), the cell join's two sides and the top-k
+    # window. The centroid model is collected at build and broadcast as a
+    # variable to the assignment kernels, so it is no plan subtree: no
+    # nested-loop attach, no single-partition fold, no broadcast join.
+    "knn_cells": (2, 0, 0, 5, (0, 0)),
     "dsir_weights": (3, 4, 4, 12, (6, 6)),  # 2 unigram LMs + totals, all 1-row/model broadcasts
     "bm25_search": (1, 1, 1, 3, (2, 2)),  # (N, avgdl) scalar-stats crossJoin
     # r9 additions, first benched r9. bcast == bnlj where both are 1: the
@@ -211,11 +213,14 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     "repetition_stats": (1, 0, 0, 2, (0, 0)),  # in-row fold; spread + lang agg only
     "heavy_hitters": (0, 1, 1, 2, (1, 1)),  # summaries checkpointed (scan at build); 1-row err bound
     "pack_bfd": (1, 0, 0, 4, (1, 1)),  # rank window + broadcast segment range join
-    # r18: +2 spread exchanges (corpus + centroid-subtree branch replans)
-    "ivf_balance": (2, 1, 2, 5, (1, 1)),  # centroid-array fold + scalar summary
+    # spread + cell count + the scalar summary; the centroid model is a
+    # broadcast variable of the assignment kernel, not a plan subtree
+    "ivf_balance": (1, 0, 1, 3, (0, 0)),
     "pq_encode": (2, 1, 1, 1, (1, 1)),  # codebook-array fold, narrow encode
     "pq_adc": (2, 1, 1, 3, (1, 1)),  # encode + map-literal ADC + TakeOrdered
-    "ivfpq": (5, 3, 3, 9, (2, 4)),  # 3-stage composition; model attaches only
+    # 3-stage composition: the codebook attach + the top-k result broadcast;
+    # the centroid model is a broadcast variable of the assignment kernel
+    "ivfpq": (3, 1, 1, 5, (2, 2)),
     "drift_psi": (0, 1, 1, 2, (1, 1)),  # checkpointed agg (scan at build); 1-row totals
     # r10 additions, frozen r10. fuzzy_join: segment⋈substring equi-join —
     # AQE broadcasts the deduped substring side at toy SF but the design
@@ -323,8 +328,8 @@ _BOUNDED_WINDOW_ALLOWLIST = {
 #   set_ops        — union/intersect/except demo needs 6 branch scans of
 #                    the same table by definition of the set algebra demo
 #   join_3way      — four distinct tables
-#   semdedup_clusters — embeddings self-join (2) + anti-join back (1) +
-#                    norms side (1); pinned tighter in _HEADLINE_SHAPE
+#   semdedup_clusters — the per-cluster kernel's input (1) + anti-join
+#                    back (1) + cluster totals (1); pinned in _HEADLINE_SHAPE
 #   split_leakage  — train side, val side, and the planted-group probe
 #   doc_tfidf      — corpus df branch, filtered tf branch, and the 1-row
 #                    corpus count (cheap columnar count scan)
@@ -333,24 +338,19 @@ _MAX_PARQUET_SCANS = {
     # base agg + 4 changelog branches: the demo DERIVES its changelog from
     # orders (a real changelog is one small source — the apply_cdc posture)
     "ivm_agg": 5,
-    # the knn_cells arm (4 — its own budget) + the exact eval arm's
+    # the knn_cells arm (its query and corpus scans) + the exact eval arm's
     # query/corpus scans; the eval comparison re-runs both pipelines
-    "ann_recall": 6,
-    # the three-stage IVF-PQ composition: centroid-model subtree (printed
-    # under both the probe-selection collect and the assignment fold),
-    # codebook subtree, and the corpus scan feeding assignment+encode; at
-    # prod scale centroids/codebook are separate model tables and the
-    # corpus is read once from its partitionBy(cell) code layout
-    "ivfpq": 5,
-    # ivfpq's 5 scans + the rerank point-lookup branch re-reading the
-    # candidates' raw vectors (at prod scale: a rerank_k-row point lookup
+    "ann_recall": 4,
+    # the three-stage IVF-PQ composition: the corpus scan feeding
+    # assignment+encode (printed under both the encode branch and the
+    # result join) and the codebook subtree; at prod scale the codebook is
+    # a separate model table and the corpus is read once from its
+    # partitionBy(cell) code layout
+    "ivfpq": 3,
+    # ivfpq's scans; the rerank reads the candidates' raw vectors from the
+    # same assignment branch (at prod scale: a rerank_k-row point lookup
     # against the partitionBy(cell) layout, not a scan)
-    "ivfpq_rerank": 5,
-    # query side + corpus side + the centroid-model subtree, which the
-    # static plan prints under BOTH fact branches (physically built once —
-    # ReusedExchange on the broadcast, verified r8); at prod scale the
-    # centroids come from a separate model table anyway
-    "knn_cells": 4,
+    "ivfpq_rerank": 3,
     # two-corpus LM fits (target + source) + one shared scoring pass
     "dsir_weights": 3,
     # window-stream branch ×2 (keep-first min-agg side + salted probe side
@@ -367,7 +367,7 @@ _MAX_PARQUET_SCANS = {
     # one batch scan per branch of the bloom split
     "dedup_incremental_bloom": 3,
     "join_3way": 4,
-    "semdedup_clusters": 4,
+    "semdedup_clusters": 3,
     "split_leakage": 3,
     "doc_tfidf": 3,
     # three distinct fact tables profiled (one scan each; each keyset is
@@ -462,11 +462,9 @@ _MAX_BNLJ = {
     "hard_negatives": 1,    # broadcast anchor batch (size = caller's lever)
     "heavy_domains": 1,     # 1-row error-bound scalar (weighted MG)
     "heavy_hitters": 1,     # 1-row error-bound scalar
-    "ivfpq": 3,            # centroid array x1 + codebook array x1 + err... all 1-row model attaches
-    "ivfpq_rerank": 3,      # same stages as ivfpq; the top-R attach is a BHJ
-    "ivf_balance": 1,       # 1-row centroid-model array (assignment fold)
-    "knn_cells": 2,         # 1-row centroid-model array onto each fact side
-    "ann_recall": 3,        # knn_cells' 2 centroid folds + the exact arm's broadcast-query cross join
+    "ivfpq": 1,             # the 1-row codebook-array attach (encode stage)
+    "ivfpq_rerank": 1,      # same stages as ivfpq; the top-R attach is a BHJ
+    "ann_recall": 1,        # the exact arm's broadcast-query cross join
     "knn_join": 1,          # broadcast query batch (size = caller's lever)
     "mixture_weights": 1,   # 1-row normalizer
     "pq_adc": 1,            # 1-row codebook-array attach (encode stage)
@@ -485,10 +483,9 @@ _MAX_BNLJ = {
 # partition exchange is safe ONLY below a scalar aggregate (its input is
 # one row per upstream partition); anywhere else it is the all-rows-
 # through-one-task funnel. The entries below are the documented scalar
-# cases (r8 sweep): corpus totals/counts, sketch merges, the 1-row
-# centroid-model build (knn_cells ×2 branches), and dsir's two LM fits.
+# cases (r8 sweep): corpus totals/counts, sketch merges, and dsir's two
+# LM fits.
 _MAX_SINGLE_PARTITION = {
-    "ann_recall": 2,  # inherits knn_cells' two scalar folds
     "backlog_monthly": 1,  # the <=span-months cumulative window's exchange
     "basket_pairs": 1,  # the one-row basket-total aggregate
     "benford_digits": 1,  # the bounded 9-row share window's exchange
@@ -509,12 +506,13 @@ _MAX_SINGLE_PARTITION = {
     "dsir_weights": 4, "fanout_compute": 1, "funnel_stages": 1,
     "heaps_curve": 1,  # the <=100-row cumulative window's exchange
     "heavy_domains": 1,
-    "heavy_hitters": 1, "hll_sketch_union": 1, "ivf_balance": 2,
+    "heavy_hitters": 1, "hll_sketch_union": 1,
+    "ivf_balance": 1,  # the one-row occupancy summary
     "info_gain_splits": 1,  # the ~11-row split-candidate window's exchange
     "jsd_sources": 1,  # the 1-row corpus token-total fold
 
-    "ivfpq": 3, "ivfpq_rerank": 3, "kll_quantiles": 1,
-    "knn_cells": 2,
+    "ivfpq": 1, "ivfpq_rerank": 1,  # the codebook-array fold
+    "kll_quantiles": 1,
     "mixture_weights": 1, "norm_dedup_stats": 1,
     "monthly_churn": 1,  # the <=span-months lag window's exchange
     "null_profile": 1,  # the one-row wide profile aggregate
@@ -579,27 +577,23 @@ def test_no_unpartitioned_window_anywhere_in_catalog(spark, sf_dir):
 
 
 def test_knn_cells_no_fact_broadcast_shuffle_hash_on_cell(spark, sf_dir):
-    """The two-sided IVF cell join's contract: the ONLY broadcasts are the
-    1-row centroid-model array (BroadcastNestedLoopJoin Cross onto each fact
-    side); the probes ⋈ corpus join itself is a ShuffledHashJoin on the cell
-    id — neither fact side rides a BroadcastHashJoin, whatever its toy-scale
-    size, because at 100 TB neither side fits one."""
+    """The two-sided IVF cell join's contract: the probes ⋈ corpus join is
+    a ShuffledHashJoin on the cell id — neither fact side rides a
+    broadcast, whatever its toy-scale size, because at 100 TB neither side
+    fits one. The centroid model reaches both assignment kernels as ONE
+    broadcast variable, so the plan holds no broadcast at all: no
+    nested-loop model attach, no BroadcastExchange, and exactly one
+    MapInArrow kernel per fact side."""
     import re
 
     df = QUERIES["knn_cells"](spark, sf_dir)
     plan = plans.formatted_plan(df)
     assert "ShuffledHashJoin" in plan, plan[:1500]
     assert re.search(r"Left keys \[1\]: \[cell#\d+L\]", plan), "join not keyed on cell"
-    # broadcast_join_count includes BNLJ: the only broadcasts allowed are the
-    # two 1-row centroid-model attaches (BNLJ Cross) — zero BroadcastHashJoin
-    assert plans.bnlj_count(df) == 2
-    assert plans.broadcast_join_count(df) == 2  # == bnlj: no BHJ on a fact side
-    # ...and the two 1-row attaches share ONE build: the centroid array is
-    # built once and the second consumer reuses the broadcast exchange
-    # (r9 review: the refactor briefly planned two independent builds)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert executed.count("ReusedExchange") >= 1, "centroid broadcast not reused"
+    assert plans.bnlj_count(df) == 0
+    assert plans.broadcast_join_count(df) == 0
+    assert "BroadcastExchange" not in plan
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 2
 
 
 def test_pii_redact_no_join_no_corpus_shuffle(spark, sf_dir):

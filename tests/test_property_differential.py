@@ -10,6 +10,7 @@ query); determinism comes from derandomize=True.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -2450,3 +2451,362 @@ def test_simpsons_check_matches_python(rows, spark, tmp_path_factory):
         assert gn == len(pts)
         assert gsw == sw and gsp == pooled
         assert gflag == flag, (g, sw, pooled)
+
+
+# --- cosine Arrow kernels (semantic_dedup, cell assignment) ------------------
+#
+# Both kernels score with functions.vectors.fold_dot, the fold's exact
+# order, so their cosines must EQUAL Spark's fold (==, not isclose), and
+# every keep/drop or cell decision must be the fold's.
+
+
+def _fold_cos(a, b):
+    """Spark's dot(a, b) / (l2_norm(a) * l2_norm(b)), op for op: NULL for a
+    NULL vector or component or unequal lengths (zip_with pads NULL)."""
+    import math
+
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    d, na, nb = 0.0, 0.0, 0.0
+    for x, y in zip(a, b):
+        d += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    return d / (math.sqrt(na) * math.sqrt(nb))
+
+
+def _spark_round5(x):
+    """F.round(x, 5): HALF_UP on the double's decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.00001"), rounding=ROUND_HALF_UP))
+
+
+def _exists_earlier_kept(rows, min_cosine):
+    """The EXISTS-earlier reference: drop every id that has a same-cluster
+    row with a smaller id whose rounded cosine passes; keep the rest."""
+    dropped = set()
+    for i, c, v in rows:
+        for j, c2, w in rows:
+            if None in (i, c, j) or c != c2 or not j < i:
+                continue
+            cos = _fold_cos(v, w)
+            if cos is not None and _spark_round5(cos) >= min_cosine:
+                dropped.add(i)
+    return sorted(
+        (i for i, _, _ in rows if i is None or i not in dropped),
+        key=lambda i: (i is None, i),
+    )
+
+
+# first component never 0, so no vector is all-zero (those raise, below)
+_component = st.one_of(st.none(), st.integers(-3, 3).map(float))
+_sem_vec = st.one_of(
+    st.none(),
+    st.tuples(
+        st.sampled_from([-3.0, -1.0, 1.0, 2.0]),
+        st.lists(_component, min_size=1, max_size=2),
+    ).map(lambda t: [t[0]] + t[1]),
+)
+_sem_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(0, 15)),
+        st.one_of(st.none(), st.integers(0, 2)),
+        _sem_vec,
+    ),
+    min_size=1,
+    max_size=18,
+)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=_sem_rows, min_cosine=st.sampled_from([0.3, 0.6, 0.95]))
+def test_semantic_dedup_matches_exists_earlier_model(rows, min_cosine, spark):
+    """semantic_dedup == the EXISTS-earlier model over NULL clusters, ids,
+    vectors and components, duplicate ids, and rows of unequal length
+    (which never pair, so they survive)."""
+    from savio_training_dask_2019_spark.operators import semantic_dedup
+
+    df = spark.createDataFrame(
+        rows, "vec_id long, cluster int, embedding array<double>"
+    )
+    got = sorted(
+        (r["vec_id"] for r in semantic_dedup(
+            df, "embedding", "vec_id", "cluster", min_cosine=min_cosine
+        ).collect()),
+        key=lambda i: (i is None, i),
+    )
+    assert got == _exists_earlier_kept(rows, min_cosine)
+
+
+@pytest.mark.parametrize("tile_rows", [1, 2, 5, 1000])
+def test_semantic_dedup_kernel_tiles_match_model(tile_rows, monkeypatch):
+    """The kernel itself (in process, no Spark): whatever the tile height,
+    each row's best earlier cosine is the fold's max, bit for bit, over a
+    cluster with duplicate ids, NULL components and two vector lengths."""
+    import random
+
+    import pyarrow as pa
+
+    from savio_training_dask_2019_spark.operators import dedup
+
+    rng = random.Random(tile_rows)
+    rows = []
+    for _ in range(40):
+        width = rng.choice([3, 3, 3, 2])
+        v = [rng.uniform(-1, 1) for _ in range(width)]
+        if rng.random() < 0.1:
+            v[1] = None
+        rows.append((rng.randrange(30), v))
+    monkeypatch.setattr(dedup, "_PAIR_TILE_BYTES", 8 * len(rows) * tile_rows)
+    out = dedup._best_earlier_cosine(
+        (pa.scalar(7),),
+        pa.table(
+            {
+                "__id": pa.array([i for i, _ in rows], pa.int64()),
+                "__v": pa.array([v for _, v in rows], pa.list_(pa.float64())),
+            }
+        ),
+    )
+    got = sorted(zip(out.column("__id").to_pylist(), out.column("__best").to_pylist()))
+    want = []
+    for i, v in rows:
+        cos = [_fold_cos(v, w) for j, w in rows if j < i]
+        cos = [c for c in cos if c is not None]
+        if cos:
+            want.append((i, max(cos)))
+    assert got == sorted(want)
+
+
+def test_semantic_dedup_cluster_larger_than_one_tile(spark):
+    """One 1,600-row cluster: the kernel scores it in two row tiles of the
+    production budget, and the kept set is still the model's."""
+    import random
+
+    from savio_training_dask_2019_spark.operators import dedup
+
+    n = 1600
+    assert dedup._PAIR_TILE_BYTES // (8 * n) < n  # really more than one tile
+    rng = random.Random(5)
+    rows = [
+        (i, 0, [float(rng.randint(1, 4)), float(rng.randint(-4, 4)), float(rng.randint(-4, 4))])
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, cluster int, embedding array<double>")
+    # 0.99: ~ the duplicates of a few directions survive, most rows drop
+    got = sorted(
+        r["vec_id"]
+        for r in dedup.semantic_dedup(
+            df, "embedding", "vec_id", "cluster", min_cosine=0.99
+        ).collect()
+    )
+    # reference: a row survives iff no earlier row passes (model, O(n²))
+    keep, seen = [], []
+    for i, _, v in rows:
+        if not any(_spark_round5(_fold_cos(v, w)) >= 0.99 for w in seen):
+            keep.append(i)
+        seen.append(v)
+    assert got == keep and 0 < len(keep) < n
+
+
+def test_semantic_dedup_zero_norm_vector_raises(spark):
+    """A zero vector that pairs with another row of its cluster has no
+    cosine (0/0): the kernel raises a ValueError naming the cluster and the
+    id — where numpy's NaN would pass every threshold and silently drop
+    every later row. Alone in its cluster, or next to rows it cannot pair
+    with (a NULL component), it raises nothing."""
+    from pyspark.errors import PythonException
+
+    from savio_training_dask_2019_spark.operators import semantic_dedup
+
+    schema = "vec_id long, cluster int, embedding array<double>"
+    df = spark.createDataFrame(
+        [(1, 4, [1.0, 0.0]), (5, 4, [0.0, 0.0]), (9, 4, [0.0, 1.0])], schema
+    )
+    with pytest.raises(PythonException, match=r"ValueError: semantic_dedup: cluster 4: id 5 "):
+        semantic_dedup(df, "embedding", "vec_id", "cluster").collect()
+    quiet = spark.createDataFrame(
+        [(1, 4, [0.0, 0.0]), (2, 5, [0.0, 0.0]), (3, 5, [None, 1.0])], schema
+    )
+    assert semantic_dedup(quiet, "embedding", "vec_id", "cluster").count() == 3
+
+
+def _vec_frame(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, cluster int, embedding array<double>")
+
+
+def test_semantic_dedup_kernel_cosines_equal_fold_bits(spark):
+    """Site 1, bit for bit: each row's kernel __best == the max of Spark's
+    own fold cosine (the former self-join's expression) over its earlier
+    same-cluster rows, on random float vectors where the summation order
+    does change the last bits."""
+    import random
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from savio_training_dask_2019_spark.functions.vectors import as_double, dot, l2_norm
+    from savio_training_dask_2019_spark.operators.dedup import _best_earlier_cosine
+
+    rng = random.Random(11)
+    rows = [
+        (i, i % 4, [rng.gauss(0, 1) for _ in range(64)]) for i in range(120)
+    ]
+    v = _vec_frame(spark, rows).select(
+        F.col("cluster").alias("__c"),
+        F.col("vec_id").alias("__id"),
+        as_double(F.col("embedding")).alias("__v"),
+    )
+    got = {
+        r["__id"]: r["__best"]
+        for r in v.groupBy("__c").applyInArrow(
+            _best_earlier_cosine,
+            StructType([v.schema["__id"], StructField("__best", DoubleType())]),
+        ).collect()
+    }
+    n = v.withColumn("__n", l2_norm(F.col("__v")))
+    a, b = n.alias("a"), n.alias("b")
+    want = {
+        r["id"]: r["best"]
+        for r in a.join(
+            b, (F.col("a.__c") == F.col("b.__c")) & (F.col("a.__id") > F.col("b.__id"))
+        )
+        .groupBy(F.col("a.__id").alias("id"))
+        .agg(
+            F.max(
+                dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.__n") * F.col("b.__n"))
+            ).alias("best")
+        )
+        .collect()
+    }
+    assert got == want and len(got) == 116
+
+
+def test_semantic_dedup_half_boundary_matches_fold(spark):
+    """Direction D's boundary case: pairs whose unrounded cosine lies
+    within a few ulps of 0.299995 — the 5th-decimal half boundary at
+    threshold 0.3 — get the fold's keep/drop decision, and the sample
+    really straddles the boundary (both decisions occur)."""
+    import math
+
+    from savio_training_dask_2019_spark.functions.vectors import dot, l2_norm
+    from savio_training_dask_2019_spark.operators import semantic_dedup
+
+    # b = (x, 1) against a = (1, 0): cos = x / sqrt(x² + 1)
+    t = 0.299995
+    x0 = t / math.sqrt(1 - t * t)
+    xs = [x0]
+    for _ in range(40):
+        xs.append(math.nextafter(xs[-1], math.inf))
+        xs.insert(0, math.nextafter(xs[0], -math.inf))
+    rows = []
+    for k, x in enumerate(xs):
+        rows += [(2 * k, k, [1.0, 0.0]), (2 * k + 1, k, [x, 1.0])]
+    df = _vec_frame(spark, rows)
+    kept = {r["vec_id"] for r in semantic_dedup(df, "embedding", "vec_id", "cluster", min_cosine=0.3).collect()}
+    a = df.where(F.col("vec_id") % 2 == 0).select("cluster", F.col("embedding").alias("a"))
+    b = df.where(F.col("vec_id") % 2 == 1).select("cluster", "vec_id", F.col("embedding").alias("b"))
+    fold_drops = {
+        r["vec_id"]: r["drop"]
+        for r in a.join(b, "cluster").select(
+            "vec_id",
+            (
+                F.round(dot(F.col("a"), F.col("b")) / (l2_norm(F.col("a")) * l2_norm(F.col("b"))), 5)
+                >= 0.3
+            ).alias("drop"),
+        ).collect()
+    }
+    assert set(fold_drops.values()) == {True, False}
+    assert {i: i not in kept for i in fold_drops} == fold_drops
+
+
+def test_cell_kernel_cosines_equal_fold_bits(spark):
+    """Site 2, bit for bit: every (row, centroid) cosine the assignment
+    kernel returns == Spark's fold ``dot(v, ce) / (n * cn)`` with both norms
+    clamped — NULL exactly where the fold is NULL (NULL vector or
+    component, unequal lengths), including a zero vector and a NULL-vector
+    centroid."""
+    import random
+
+    from savio_training_dask_2019_spark.functions.vectors import dot, l2_norm
+    from savio_training_dask_2019_spark.operators.similarity import (
+        _NORM_FLOOR,
+        _centroid_model,
+        _score_cells,
+    )
+
+    rng = random.Random(3)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(32)]) for i in range(60)]
+    rows += [(60, None), (61, [0.0] * 32), (62, [1.0] * 31 + [None]), (63, [1.0] * 16)]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    cents = spark.createDataFrame(
+        [(c, rows[c][1]) for c in (0, 7, 13, 21)]
+        + [(30, [2.0] * 16), (40, None)],
+        "cid long, ce array<double>",
+    )
+    scored = _score_cells(df, "v", _centroid_model(cents))
+    got = {r["id"]: (r["n"], list(r["sims"])) for r in scored.collect()}
+    clamp = lambda c: F.greatest(l2_norm(c), F.lit(_NORM_FLOOR))  # noqa: E731
+    fold = (
+        df.crossJoin(cents)
+        .select(
+            "id",
+            "cid",
+            clamp(F.col("v")).alias("n"),
+            (dot(F.col("v"), F.col("ce")) / (clamp(F.col("v")) * clamp(F.col("ce")))).alias("s"),
+        )
+        .collect()
+    )
+    want = {}
+    for r in sorted(fold, key=lambda r: r["cid"]):
+        want.setdefault(r["id"], (r["n"], []))[1].append(r["s"])
+    assert got == want
+    assert want[60][1] == [None] * 6 and want[63][1][:4] == [None] * 4
+
+
+def test_assign_cells_matches_fold_assignment(spark):
+    """assign_cells == the former per-row fold assignment (argmax of
+    struct(round(cosine, 5), -cid) over a broadcast centroid array),
+    computed here in Spark: a NULL-vector row, a NULL-component row and a
+    row no centroid shares the length of keep today's cell — the smallest
+    cid — and a zero vector takes it by the tie rule."""
+    import random
+
+    from savio_training_dask_2019_spark.functions.vectors import dot, l2_norm
+    from savio_training_dask_2019_spark.operators.similarity import _NORM_FLOOR, assign_cells
+
+    rng = random.Random(9)
+    rows = [(i, [float(rng.randint(-3, 3)) for _ in range(6)]) for i in range(40)]
+    rows += [(40, None), (41, [1.0] * 5 + [None]), (42, [1.0, 2.0]), (43, [0.0] * 6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = df.where(F.col("vec_id").isin(3, 8, 17, 25)).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    )
+    got = {r["id"]: r["cell"] for r in assign_cells(df, "embedding", "vec_id", cents).collect()}
+    clamp = lambda c: F.greatest(l2_norm(c), F.lit(_NORM_FLOOR))  # noqa: E731
+    want = {
+        r["vec_id"]: -r["m"]["negcid"]
+        for r in df.crossJoin(cents)
+        .groupBy("vec_id")
+        .agg(
+            F.max(
+                F.struct(
+                    F.round(
+                        dot(F.col("embedding"), F.col("ce"))
+                        / (clamp(F.col("embedding")) * clamp(F.col("ce"))),
+                        5,
+                    ).alias("s"),
+                    (-F.col("cid")).alias("negcid"),
+                )
+            ).alias("m")
+        )
+        .collect()
+    }
+    assert got == want
+    assert got[40] == got[41] == got[42] == got[43] == 3
