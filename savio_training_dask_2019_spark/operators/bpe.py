@@ -16,8 +16,10 @@ word's corpus count riding as a weight:
   non-overlapping, the standard greedy BPE apply — no Python boundary;
 - each round's table is eagerly ``localCheckpoint``-ed: k rounds would
   otherwise stack k ``aggregate`` lambdas into one plan (analysis blows
-  up long before execution does), and the checkpoint RDDs are GC'd with
-  the final frame.
+  up long before execution does). The round it replaced is released once
+  the new one has materialized, by the rule in ``operators/rounds.py``;
+  the loop is written out rather than run by ``rounds.iterate`` because
+  each step depends on a driver-side ``collect()``.
 
 No SQL oracle is possible (k data-dependent rounds; each round's
 transform depends on the previous argmax), so the catalog query is
@@ -31,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens as _tokens
+from .rounds import _checkpoint_rdd_ids, _release_rdds
 
 
 def _apply_merge(syms_col, left: str, right: str):
@@ -79,6 +82,7 @@ def bpe_train(
     collect; the corpus itself is never touched (see module docstring)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    sc = word_counts.sparkSession.sparkContext
     seg = word_counts.select(
         "word", "wc", F.split(F.col("word"), "").alias("syms")
     ).localCheckpoint(eager=True)
@@ -104,11 +108,11 @@ def bpe_train(
             break
         row = best[0]
         merges.append((row["l"], row["r"], int(row["cnt"])))
-        prev = seg
-        seg = seg.select(
+        nxt = seg.select(
             "word", "wc", _apply_merge(F.col("syms"), row["l"], row["r"]).alias("syms")
         ).localCheckpoint(eager=True)
-        del prev
+        _release_rdds(sc, _checkpoint_rdd_ids(seg))
+        seg = nxt
     return merges, seg
 
 

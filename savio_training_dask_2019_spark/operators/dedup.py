@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens as _tokens
+from .rounds import iterate
 
 # Salt fan-out for hot-key join-backs whose build side is 1 row per key
 # (keep-first / totals lookups): the probe side salts on its id, the build
@@ -838,39 +839,6 @@ def semantic_dedup(
     )
 
 
-def _persistent_rdd_ids(sc) -> set:
-    """Ids currently registered in the SparkContext persistent-RDD map."""
-    return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-
-def _checkpoint_rdd_ids(df: DataFrame) -> set:
-    """The id of the RDD behind an eagerly ``localCheckpoint``-ed frame —
-    the one :func:`_release_rdds` frees once the frame is superseded.
-    Unlike a before/after diff of :func:`_persistent_rdd_ids`, it never
-    picks up a cache that the checkpoint's own job materialized first (a
-    caller's lazy ``persist()`` of the input)."""
-    return {df._jdf.logicalPlan().rdd().id()}
-
-
-def _release_rdds(sc, ids: set) -> None:
-    """Unpersist checkpoint blocks by RDD id via
-    ``JavaSparkContext.getPersistentRDDs``. ``Dataset.unpersist()`` on a
-    ``localCheckpoint``-ed frame is a **no-op** — the checkpoint RDD is
-    persisted at RDD level and never registered with the Dataset cache
-    manager (measured on Spark 4.1: the id stays in getPersistentRDDs and
-    the blocks stay resident; ``df.rdd.unpersist()`` is equally
-    ineffective, it targets the derived Row-conversion RDD). Iterative
-    loops must therefore free superseded rounds through the RDD registry
-    or leak one snapshot per round until the ContextCleaner GCs them.
-    Only ever call this on rounds whose SUCCESSOR has already eagerly
-    materialized — a released checkpoint cannot be recomputed."""
-    reg = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = reg.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -890,86 +858,46 @@ def connected_components(
     choice here; corpora with long chain topologies want the large-star/
     small-star variant (alternating contraction, O(log n) rounds) instead.
     Each round is two shuffles (neighbor-min groupBy + label join) over
-    (id, label) longs only; each round's labels are ``localCheckpoint``-ed
-    (truncating the 3^rounds iterative lineage — see
-    :func:`connected_components_star` for the failure mode) and the
-    previous round's blocks are released as soon as the next materializes
-    — via the RDD registry (see :func:`_release_rdds`; ``Dataset.
-    unpersist()`` would be a no-op on a checkpointed frame). The RETURNED
-    frame reads the FINAL round's checkpoint, so those blocks stay
-    resident until the caller drops every reference and the
-    ContextCleaner garbage-collects the checkpoint RDD — one label
-    snapshot, (id, label) longs only."""
+    (id, label) longs only, run by :func:`.rounds.iterate`: each round's
+    labels are ``localCheckpoint``-ed (truncating the 3^rounds iterative
+    lineage — see :func:`connected_components_star` for the failure mode)
+    and the superseded round is released."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .persist()
     )
-    # round 0 fused into init: label = min(own id, min direct neighbor) —
-    # one shuffle instead of an identity round plus its convergence check
-    labels = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nb"))
-        .select(
-            F.col("a").alias("id"),
-            F.least(F.col("a"), F.col("nb")).alias("label"),
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        nbr = (
+            sym.join(labels, sym["b"] == labels["id"])
+            .groupBy("a")
+            .agg(F.min("label").alias("nbr_label"))
         )
-    ).persist()
-    sc = edges.sparkSession.sparkContext
-    # Materialize both persisted inputs BEFORE the first registry snapshot:
-    # persist() is lazy, and a cache RDD only appears in getPersistentRDDs
-    # once its first action runs. Without this count, round 1's eager
-    # localCheckpoint is what first computes sym and the round-0 labels, so
-    # their cache-RDD ids land in `new_ids`, round 2's _release_rdds evicts
-    # the shared adjacency cache, and every later round silently recomputes
-    # the edge union (perf-only — lineage stays intact). One bounded action
-    # over (id, label) longs; scanning labels also populates sym's cache.
-    # Pinned by tests/test_operators.py::test_cc_releases_only_checkpoints.
-    labels.count()
-    held: set = set()  # checkpoint RDD ids backing the CURRENT labels frame
+        # the convergence flag is computed IN the same select (the left
+        # join already holds both the old and the new label), so the
+        # fixpoint check is a filter-count over the checkpointed round,
+        # not a second new⋈old join that re-shuffles the label table
+        nxt = F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label")))
+        return labels.join(nbr, labels["id"] == nbr["a"], "left").select(
+            F.col("id"), nxt.alias("label"), (nxt != F.col("label")).alias("ch")
+        )
+
     try:
-        for _ in range(max_iter):
-            nbr = (
-                sym.join(labels, sym["b"] == labels["id"])
-                .groupBy("a")
-                .agg(F.min("label").alias("nbr_label"))
+        # round 0 fused into init: label = min(own id, min direct neighbor) —
+        # one shuffle instead of an identity round plus its convergence check
+        labels = (
+            sym.groupBy("a")
+            .agg(F.min("b").alias("nb"))
+            .select(
+                F.col("a").alias("id"),
+                F.least(F.col("a"), F.col("nb")).alias("label"),
             )
-            # localCheckpoint, not bare persist: each round references the
-            # previous labels ~3x, so an un-truncated lineage grows 3^rounds
-            # and the driver OOMs rendering the plan near round ~15 — persist
-            # alone caches blocks but does NOT cut the logical plan. (Chain
-            # topologies hit this budget; dense near-dup graphs converge
-            # first, which is why it stayed latent until the star variant's
-            # differential tests ran propagation at max_iter=60.)
-            before = _persistent_rdd_ids(sc)
-            # the convergence flag is computed IN the same select (the left
-            # join already holds both the old and the new label), so the
-            # fixpoint check below is a filter-count over the checkpointed
-            # round — r18: the previous new⋈old labels join re-shuffled the
-            # label table once per round purely to count changes
-            nxt = F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            )
-            new_labels = (
-                labels.join(nbr, labels["id"] == nbr["a"], "left")
-                .select(
-                    F.col("id"),
-                    nxt.alias("label"),
-                    (nxt != F.col("label")).alias("ch"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            new_ids = _persistent_rdd_ids(sc) - before
-            changed = new_labels.filter("ch").count()
-            # free the superseded round: Dataset-level unpersist for the
-            # round-0 persist, RDD-registry release for checkpointed rounds
-            if held:
-                _release_rdds(sc, held)
-            else:
-                labels.unpersist()
-            labels, held = new_labels, new_ids
-            if changed == 0:
-                break
+            .localCheckpoint(eager=True)
+        )
+        labels = iterate(
+            labels, step, max_iter, until=lambda s: s.filter("ch").count() == 0
+        )
         return labels.select("id", F.col("label").alias("cluster_id"))
     finally:
         sym.unpersist()
@@ -1004,18 +932,16 @@ def connected_components_star(
     round-trip the propagation variant pays); at the fixed point the edge
     set is a star forest centered at component minima.
 
-    Each round's edge set is ``localCheckpoint``-ed: one round references
-    its predecessor ~12 times (two stars × symmetrize/min/join), so
-    without lineage truncation the logical plan grows ~12^rounds and the
-    driver OOMs just *printing* it by round 8 (measured). Superseded
-    rounds are freed through the RDD registry (:func:`_release_rdds` —
-    ``Dataset.unpersist()`` is a no-op on checkpointed frames); the final
-    round's blocks back the returned frame and are GC'd by the
-    ContextCleaner once the caller drops it. Local checkpointing is the
-    standard iterative-algorithm hygiene; a cluster-reliability-sensitive
-    deployment would point ``sparkContext.setCheckpointDir`` at durable
-    storage and use ``checkpoint()`` instead (executor loss under
-    localCheckpoint forfeits the blocks)."""
+    Each round's edge set is ``localCheckpoint``-ed by
+    :func:`.rounds.iterate`, which releases the superseded round: one round
+    references its predecessor ~12 times (two stars × symmetrize/min/join),
+    so without lineage truncation the logical plan grows ~12^rounds and the
+    driver OOMs just *printing* it by round 8 (measured). Local
+    checkpointing is the standard iterative-algorithm hygiene; a
+    cluster-reliability-sensitive deployment would point
+    ``sparkContext.setCheckpointDir`` at durable storage and use
+    ``checkpoint()`` instead (executor loss under localCheckpoint forfeits
+    the blocks)."""
     e = (
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
@@ -1023,13 +949,12 @@ def connected_components_star(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     nodes = (
         edges.select(F.col(src).alias("id"))
         .union(edges.select(F.col(dst).alias("id")))
         .distinct()
-        .persist()
     )
 
     def _signature(df: DataFrame) -> tuple[int, int]:
@@ -1041,56 +966,40 @@ def connected_components_star(
         ).collect()[0]
         return row["n"], row["sig"]
 
-    sc = edges.sparkSession.sparkContext
-    held: set = set()  # checkpoint RDD ids backing the CURRENT edge frame
-    try:
-        sig = _signature(e)
-        for _ in range(max_iter):
-            # large-star over the symmetrized adjacency
-            sym = e.select("a", "b").union(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            mins = sym.groupBy("a").agg(
-                F.least(F.min("b"), F.first("a")).alias("m")
-            )
-            large = (
-                sym.join(mins, "a")
-                .where(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .distinct()
-            )
-            # small-star over the (larger -> smaller) orientation
-            mins2 = large.groupBy("a").agg(F.min("b").alias("m"))
-            before = _persistent_rdd_ids(sc)
-            small = (
-                large.join(mins2, "a")
-                .where(F.col("b") != F.col("m"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .union(mins2.select("a", F.col("m").alias("b")))
-                .distinct()
-                .localCheckpoint(eager=True)  # truncate the iterative lineage
-            )
-            new_ids = _persistent_rdd_ids(sc) - before
-            new_sig = _signature(small)
-            # free the superseded round: Dataset-level unpersist for the
-            # initial persist, RDD-registry release for checkpointed rounds
-            if held:
-                _release_rdds(sc, held)
-            else:
-                e.unpersist()
-            e, held = small, new_ids
-            if new_sig == sig:
-                break
-            sig = new_sig
-        final = e.groupBy("a").agg(F.min("b").alias("root"))
-        return (
-            nodes.join(final, nodes["id"] == final["a"], "left")
-            .select("id", F.coalesce("root", "id").alias("cluster_id"))
+    def step(e: DataFrame, _: int) -> DataFrame:
+        # large-star over the symmetrized adjacency
+        sym = e.select("a", "b").union(
+            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-    finally:
-        if not held:
-            e.unpersist()  # loop never checkpointed; drop the initial persist
-        nodes.unpersist()
+        mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
+        large = (
+            sym.join(mins, "a")
+            .where(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .distinct()
+        )
+        # small-star over the (larger -> smaller) orientation
+        mins2 = large.groupBy("a").agg(F.min("b").alias("m"))
+        return (
+            large.join(mins2, "a")
+            .where(F.col("b") != F.col("m"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .union(mins2.select("a", F.col("m").alias("b")))
+            .distinct()
+        )
+
+    sig = _signature(e)
+
+    def unchanged(e: DataFrame) -> bool:
+        nonlocal sig
+        prev, sig = sig, _signature(e)
+        return sig == prev
+
+    e = iterate(e, step, max_iter, until=unchanged)
+    final = e.groupBy("a").agg(F.min("b").alias("root"))
+    return nodes.join(final, nodes["id"] == final["a"], "left").select(
+        "id", F.coalesce("root", "id").alias("cluster_id")
+    )
 
 
 def simhash_near_dup_pairs(

@@ -18,10 +18,14 @@ Scale: the Pregel-style plan — the checkpointed edge list is the only
 corpus-sized state (out-degrees ride on the O(nodes) rank table); each
 iteration is ONE hash join ``edges ⋈ ranks`` on src (it broadcasts while
 the node count fits the session's broadcast threshold — the rule is in
-:func:`pagerank`) plus ONE map-side partial-aggregated ``groupBy(dst)``.
-``localCheckpoint`` per iteration truncates lineage exactly as
-``connected_components`` does, and superseded rounds are released; driver
-state is one scalar (the node count).
+:func:`pagerank`) plus ONE map-side partial-aggregated ``groupBy(dst)``;
+driver state is one scalar (the node count).
+
+Round discipline: every iterative operator here (pagerank, bfs_hops,
+sssp_bounded, kcore_peel, label_propagation) is a step function run by
+:func:`.rounds.iterate`, which checkpoints each round and releases the one
+it replaced; a fixed edge list is held by :func:`.rounds.checkpointed`.
+The release rule is stated once, in ``operators/rounds.py``.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _checkpoint_rdd_ids, _release_rdds
+from .rounds import checkpointed, iterate
 
 
 # Spark's own size estimate for a row of three longs (8 B row header + 3 × 8 B)
@@ -122,19 +126,13 @@ def pagerank(
     shuffles the whole edge list every round. Past the threshold, or with
     broadcasting disabled (≤ 0), there is no hint and the round is that
     shuffle join, which is equally correct.
-
-    Each round's checkpoint is released once its successor has
-    materialized, and the edge list on return, so a call leaves exactly
-    one checkpoint registered: the one the returned frame reads.
     """
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("bigint").alias("w"))
     spark = edges.sparkSession
-    sc = spark.sparkContext
     # corpus-sized state, read every round — persist once
-    e = edges.select(*cols).localCheckpoint(eager=True)
-    try:
+    with checkpointed(edges.select(*cols)) as e:
         if weight_col is not None:
             # fail fast on weights the update rule can't survive (see docstring)
             bad = e.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).collect()
@@ -154,6 +152,9 @@ def pagerank(
         n_nodes = nodes.count()  # bounded: ONE driver scalar, O(1) result
         if n_nodes == 0:
             return nodes.select("id", F.lit(0).cast("bigint").alias("rank_micro"))
+        r0 = F.lit(scale // n_nodes).cast("bigint")
+        if iters <= 0:
+            return nodes.select("id", r0.alias("rank_micro"))
 
         base = ((damping_den - damping_num) * scale) // (damping_den * n_nodes)
         update = F.expr(f"CAST({base} + ({damping_num} * s) div {damping_den} AS BIGINT)")
@@ -161,17 +162,13 @@ def pagerank(
             "(rank_micro * w) div deg" if weight_col is not None else "rank_micro div deg"
         )
         bcast = _broadcast_fits(spark, n_nodes)
-        ranks = nodes.withColumn("rank_micro", F.lit(scale // n_nodes).cast("bigint"))
-        held = _checkpoint_rdd_ids(nodes)  # the checkpoint `ranks` reads
-        for _ in range(iters):
-            ranks = _pagerank_round(e, ranks, contrib, update, bcast).localCheckpoint(
-                eager=True
-            )
-            _release_rdds(sc, held)  # the superseded round (or the node table)
-            held = _checkpoint_rdd_ids(ranks)
-        return ranks.select("id", "rank_micro")
-    finally:
-        _release_rdds(sc, _checkpoint_rdd_ids(e))
+
+        def step(ranks: DataFrame, i: int) -> DataFrame:
+            if i == 1:  # the node table carries no rank yet
+                ranks = ranks.withColumn("rank_micro", r0)
+            return _pagerank_round(e, ranks, contrib, update, bcast)
+
+        return iterate(nodes, step, iters).select("id", "rank_micro")
 
 
 def pagerank_oracle_cte(
@@ -344,50 +341,36 @@ def bfs_hops(
     exposure), exact by construction: hop levels are set membership, no
     arithmetic at all.
 
-    Pregel-style frontier loop (the connected-components / pagerank
-    pattern): per hop ONE hash join frontier⋈edges on ``src`` + distinct
-    + ONE left-anti join against the visited set, localCheckpoint per
-    round (frontiers are O(reachable) and lineage must not stack). The
-    edge list is checkpointed once — it is read every hop. Superseded
-    frontiers and visited sets, and the edge list, are released once
-    their successors have materialized, so a call leaves one checkpoint
-    registered (the returned frame's). Empty frontiers make remaining hops
-    cheap no-ops (no driver branching, so the loop is deterministic in
-    plan count)."""
+    Pregel-style frontier loop (the pagerank pattern): the state is the
+    visited set, and hop ``h``'s frontier is its ``hops == h-1`` rows; per
+    hop ONE hash join frontier⋈edges on ``src`` + distinct + ONE left-anti
+    join against the visited set, one checkpoint per hop. The edge list is
+    checkpointed once — it is read every hop. Empty frontiers make
+    remaining hops cheap no-ops (no driver branching, so the loop is
+    deterministic in plan count)."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    sc = edges.sparkSession.sparkContext
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
-    try:
+
+    with checkpointed(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))) as e:
         visited = (
             seeds.select(F.col(id_col).alias("id"))
             .distinct()
             .withColumn("hops", F.lit(0).cast("int"))
             .localCheckpoint(eager=True)
         )
-        frontier, nxt = visited.select("id"), None
-        for h in range(1, max_hops + 1):
-            held = _checkpoint_rdd_ids(visited)
-            if nxt is not None:
-                held |= _checkpoint_rdd_ids(nxt)  # the old frontier
+
+        def step(visited: DataFrame, h: int) -> DataFrame:
+            frontier = visited.where(F.col("hops") == h - 1).select("id")
             nxt = (
                 frontier.join(e, frontier["id"] == e["src"])
                 .select(F.col("dst").alias("id"))
                 .distinct()
                 .join(visited.select("id"), "id", "left_anti")
                 .withColumn("hops", F.lit(h).cast("int"))
-                .localCheckpoint(eager=True)
             )
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            _release_rdds(sc, held)
-            frontier = nxt.select("id")
-        if nxt is not None:
-            _release_rdds(sc, _checkpoint_rdd_ids(nxt))
-        return visited
-    finally:
-        _release_rdds(sc, _checkpoint_rdd_ids(e))
+            return visited.unionByName(nxt)
+
+        return iterate(visited, step, max_hops)
 
 
 def bfs_oracle_cte(
@@ -442,44 +425,35 @@ def sssp_bounded(
 
     Scale (the Pregel discipline shared with pagerank/bfs_hops): per
     round ONE dist⋈edges hash join + one map-side-combinable min-groupBy
-    over (|dist| + |relaxed|) rows, localCheckpoint per round so lineage
-    never stacks; the edge list is checkpointed once, and it and every
-    superseded round are released (one checkpoint stays registered: the
-    result's). Distances carry
-    (id, cost) longs only — never paths. Negative weights are allowed
+    over (|dist| + |relaxed|) rows, one checkpoint per round; the edge
+    list is checkpointed once. Distances carry (id, cost) longs only —
+    never paths. Negative weights are allowed
     by the algebra (it is Bellman-Ford) but rounds must then reach the
     longest useful path length; with non-negative weights ``rounds`` =
     graph diameter recovers full Dijkstra semantics."""
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    sc = edges.sparkSession.sparkContext
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).alias("w"),
-    ).localCheckpoint(eager=True)
-    try:
+
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")]
+    with checkpointed(edges.select(*cols)) as e:
         dist = (
             seeds.select(F.col(id_col).alias("id"))
             .distinct()
             .withColumn("cost", F.lit(0).cast("long"))
             .localCheckpoint(eager=True)
         )
-        for _ in range(rounds):
+
+        def step(dist: DataFrame, _: int) -> DataFrame:
             relaxed = dist.join(e, dist["id"] == e["src"]).select(
                 F.col("dst").alias("id"), (dist["cost"] + e["w"]).alias("cost")
             )
-            held = _checkpoint_rdd_ids(dist)
-            dist = (
+            return (
                 dist.unionByName(relaxed)
                 .groupBy("id")
                 .agg(F.min("cost").alias("cost"))
-                .localCheckpoint(eager=True)
             )
-            _release_rdds(sc, held)  # the superseded round
-        return dist
-    finally:
-        _release_rdds(sc, _checkpoint_rdd_ids(e))
+
+        return iterate(dist, step, rounds)
 
 
 def sssp_oracle_cte(
@@ -532,25 +506,25 @@ def kcore_peel(
 
     Scale (the Pregel discipline): per round ONE map-side-combinable
     degree groupBy + ONE semi-join per endpoint against the O(survivors)
-    keep-set, localCheckpoint per round so lineage never stacks. Edges
+    keep-set, one checkpoint per round (the state is the edge set). Edges
     carry (src, dst) longs only. Monotone: the edge set only shrinks, so
     rounds beyond convergence are cheap no-ops."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
+
+    def step(e: DataFrame, _: int) -> DataFrame:
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        keep = deg.where(F.col("deg") >= k).select("src")
+        return e.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+        )
+
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("src")
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return e.groupBy(F.col("src").alias("id")).agg(
+    return iterate(e, step, rounds).groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     )
 
@@ -612,30 +586,25 @@ def label_propagation(
     Scale (the Pregel discipline): per round ONE hash join
     ``edges ⋈ labels`` on dst + TWO map-side-combinable aggs (the
     (id, lbl) count, then the per-id argmax via a struct max — no window,
-    so no per-node sort), localCheckpoint per round so lineage never
-    stacks; labels is O(nodes), edges the only corpus-sized state.
-    Superseded rounds and the edge list are released, so a call leaves
-    one checkpoint registered (the result's)."""
+    so no per-node sort), one checkpoint per round; labels is O(nodes),
+    edges the only corpus-sized state."""
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    sc = edges.sparkSession.sparkContext
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
-    try:
+
+    with checkpointed(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))) as e:
         labels = (
             e.select(F.col("src").alias("id"))
             .distinct()
             .select("id", F.col("id").alias("lbl"))
             .localCheckpoint(eager=True)
         )
-        for _ in range(rounds):
+
+        def step(labels: DataFrame, _: int) -> DataFrame:
             nbr = e.join(labels, e["dst"] == labels["id"]).select(
                 e["src"].alias("nid"), "lbl"
             )
             counts = nbr.groupBy("nid", "lbl").agg(F.count(F.lit(1)).alias("cnt"))
-            held = _checkpoint_rdd_ids(labels)
-            labels = (
+            return (
                 counts.groupBy("nid")
                 .agg(
                     F.max(
@@ -643,12 +612,9 @@ def label_propagation(
                     ).alias("m")
                 )
                 .select(F.col("nid").alias("id"), (-F.col("m.neg")).alias("lbl"))
-                .localCheckpoint(eager=True)
             )
-            _release_rdds(sc, held)  # the superseded round
-        return labels
-    finally:
-        _release_rdds(sc, _checkpoint_rdd_ids(e))
+
+        return iterate(labels, step, rounds)
 
 
 def lpa_oracle_cte(

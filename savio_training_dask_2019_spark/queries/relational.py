@@ -1217,6 +1217,29 @@ SELECT l_orderkey, l_linenumber, 'l_tax',
 _PR_ITERS = 5
 
 
+def _trade_pairs(spark: SparkSession, sf_dir: str, count: str | None = None) -> DataFrame:
+    """The supplier–customer trade graph's pairs ``(a, b)``: supplier
+    ``suppkey*2`` and customer ``custkey*2+1`` for every lineitem ⋈ order.
+    Distinct pairs by default; with ``count``, one row per pair carrying
+    its number of lineitems in that column."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
+    a = (F.col("l_suppkey") * 2).alias("a")
+    b = (F.col("o_custkey") * 2 + 1).alias("b")
+    if count is None:
+        return j.select(a, b).distinct()
+    return j.groupBy(a, b).agg(F.count(F.lit(1)).alias(count))
+
+
+def _symmetrize(pairs: DataFrame, *carry: str) -> DataFrame:
+    """Both directions of every pair: ``(src, dst, *carry)`` from ``(a, b)``
+    and from ``(b, a)``."""
+    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"), *carry).unionByName(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), *carry)
+    )
+
+
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the supplier↔customer trade graph — the iterative
     influence/centrality op completing the graph tier (connected components
@@ -1237,19 +1260,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — see ``operators.graph.pagerank``) + ONE map-side-combined
     groupBy(dst) sum; localCheckpoint per round truncates lineage
     (connected_components precedent); driver state = one scalar (N)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    edges = _symmetrize(_trade_pairs(spark, sf_dir))
     r = pagerank(edges, iters=_PR_ITERS)
     return r.select(
         "id",
@@ -1291,19 +1302,7 @@ def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan to `pagerank` (the weight rides the checkpointed
     edge list; W_src is one extra sum in the same deg agg)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
+    edges = _symmetrize(_trade_pairs(spark, sf_dir, count="w"), "w")
     r = pagerank(edges, iters=_PR_ITERS, weight_col="w")
     return r.select(
         "id",
@@ -1597,19 +1596,7 @@ def q_reachable_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE frontier⋈edges hash join + distinct + ONE anti-join vs visited,
     checkpointed per round (operators/graph.bfs_hops); the edge list is
     checkpointed once and re-read per hop."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    edges = _symmetrize(_trade_pairs(spark, sf_dir))
     seeds = (
         load_table(spark, sf_dir, "supplier")
         .where(F.col("s_nationkey") == _BFS_SEED_NATION)
@@ -1665,20 +1652,10 @@ def q_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round ONE dist⋈edges hash join + one map-side-combinable
     min-groupBy, checkpointed per round; distances carry (id, cost)
     longs only, never paths. Same Pregel discipline as pagerank/bfs."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .select("a", "b", F.expr("1000000 div n").alias("w"))
+    pairs = _trade_pairs(spark, sf_dir, count="n").select(
+        "a", "b", F.expr("1000000 div n").alias("w")
     )
-    edges = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
+    edges = _symmetrize(pairs, "w")
     seeds = (
         load_table(spark, sf_dir, "supplier")
         .where(F.col("s_nationkey") == _BFS_SEED_NATION)
@@ -1742,19 +1719,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one map-side-combined degree groupBy + two
     semi-joins against the O(survivors) keep set, checkpointed; the
     edge set only shrinks, so post-convergence rounds are no-ops."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    edges = _symmetrize(_trade_pairs(spark, sf_dir))
     core = kcore_peel(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
     return core.select(
         "id",
@@ -1801,19 +1766,8 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one edges⋈labels hash join + two map-side
     aggs, checkpointed (the Pregel discipline); the final rollup is
     communities-sized."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    sym = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    pairs = _trade_pairs(spark, sf_dir)
+    sym = _symmetrize(pairs)
     selfs = (
         pairs.select(F.col("a").alias("src"))
         .unionByName(pairs.select(F.col("b").alias("src")))
@@ -2396,23 +2350,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint the pair lineage re-executes per consumer (the
     triangle_count lesson; the scan-budget sweep caught the 12-scan
     draft)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _symmetrize(_trade_pairs(spark, sf_dir)).localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     da = deg.select(F.col("src").alias("ka"), F.col("d").alias("da"))
     db = deg.select(F.col("src").alias("kb"), F.col("d").alias("db"))
@@ -3549,19 +3487,9 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distinct pair shuffle + one degree groupBy + a
     ≤64-bucket agg; the same first two stages every graph query here
     already pays."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("a"),
-            (F.col("o_custkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-        # both union branches read it — without the checkpoint each
-        # re-runs the lineitem⋈orders distinct (the triangle_count lesson)
-        .localCheckpoint(eager=True)
-    )
+    # both union branches read it — without the checkpoint each re-runs
+    # the lineitem⋈orders distinct (the triangle_count lesson)
+    pairs = _trade_pairs(spark, sf_dir).localCheckpoint(eager=True)
     edges = pairs.select(F.col("a").alias("src")).unionByName(
         pairs.select(F.col("b").alias("src"))
     )

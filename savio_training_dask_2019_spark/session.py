@@ -69,12 +69,10 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=RUNTIME_CONFS)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # floor on scan splits: small inputs (one sub-128MB file) otherwise
         # scan single-task; at cluster scale "min splits ≈ default
@@ -90,11 +88,6 @@ def get_spark(
         # on ngram_jaccard: its tiny cached inverted index otherwise pins
         # 64 near-empty tasks per downstream stage)
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        # see RUNTIME_CONFS for rationale (duplicated HOF eval below exchanges)
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

@@ -267,14 +267,38 @@ def test_pagerank_leaves_one_checkpoint_registered(spark):
         cached.unpersist()
 
 
-@pytest.mark.parametrize("query", ["reachable_nodes", "sssp_bounded", "lpa_communities"])
+@pytest.mark.parametrize(
+    "query",
+    [
+        "reachable_nodes",
+        "sssp_bounded",
+        "lpa_communities",
+        "kcore_peel",
+        "dedup_clusters",
+        "bpe_train_merges",
+        "caller_cache",
+    ],
+)
 def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
-    """bfs_hops, sssp_bounded and label_propagation release every round
-    their successor superseded, and the edge list, as pagerank does:
-    building the catalog query (the loops run eagerly) grows the
-    persistent-RDD registry by at most the one checkpoint the result
-    reads, and the result still collects from it."""
-    from savio_training_dask_2019_spark.queries import QUERIES
+    """bfs_hops, sssp_bounded, label_propagation, kcore_peel,
+    connected_components (dedup_clusters) and bpe_train release every
+    round their successor superseded, and any edge list they checkpoint,
+    as pagerank does: building the catalog query (the loops run eagerly)
+    grows the persistent-RDD registry by at most the one checkpoint the
+    result reads, and the result still collects from it. The count is
+    taken after the bench loop's cache reset: dedup_clusters' n-gram pair
+    tier holds a Dataset cache of its index, which is not a round.
+
+    ``caller_cache``: connected_components, connected_components_star and
+    kcore_peel over one lazily ``persist()``-ed edge list, which the first
+    call materializes. The registry grows by the caller's cache plus one
+    checkpoint per result: the cache survives, and no round is left."""
+    from savio_training_dask_2019_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+    from savio_training_dask_2019_spark.operators.graph import kcore_peel
+    from savio_training_dask_2019_spark.queries import QUERIES, vectorops
 
     sc = spark.sparkContext
 
@@ -282,9 +306,26 @@ def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
         return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
     before = registered()
-    out = QUERIES[query](spark, sf_dir)
-    assert len(registered() - before) <= 1
-    assert out.count() > 0
+    if query != "caller_cache":
+        out = QUERIES[query](spark, sf_dir)
+        spark.catalog.clearCache()
+        vectorops.invalidate_cached_indexes()
+        assert len(registered() - before) <= 1
+        assert out.count() > 0
+        return
+    pairs = _sym([(i, (i * 3) % 17) for i in range(17)] + [(40, 41), (41, 42)])
+    cached = spark.createDataFrame(pairs, ["src", "dst"]).select("src", "dst").persist()
+    try:
+        outs = [
+            connected_components(cached, "src", "dst"),
+            connected_components_star(cached, "src", "dst"),
+            kcore_peel(cached, k=2, rounds=3),
+        ]
+        assert len(registered() - before) == 1 + len(outs)
+        assert cached.count() == len(pairs)
+        assert all(o.count() > 0 for o in outs)
+    finally:
+        cached.unpersist()
 
 
 # --- outlier_mad -------------------------------------------------------------

@@ -260,21 +260,21 @@ def test_connected_components_chain_triangle_pair(spark):
 def test_cc_releases_only_checkpoints(spark, monkeypatch):
     """Per-round block release must free ONLY the superseded round's
     localCheckpoint RDD — never the shared adjacency cache. persist() is
-    lazy, so without the pre-loop materialization in connected_components
-    the round-1 eager checkpoint is what first computes the sym/labels
-    caches and their cache-RDD ids leak into the release set; round 2 then
-    evicts the shared edge union and every later round recomputes it.
+    lazy, so the round-0 eager checkpoint is what first computes the sym
+    cache; a release set taken as a before/after registry diff would
+    capture that cache id and evict the shared edge union, and every later
+    round would recompute it.
     Pin: each _release_rdds call receives exactly one id (the checkpoint)."""
-    from savio_training_dask_2019_spark.operators import dedup
+    from savio_training_dask_2019_spark.operators import dedup, rounds
 
     released = []
-    real = dedup._release_rdds
+    real = rounds._release_rdds
 
     def recording(sc, ids):
         released.append(set(ids))
         real(sc, ids)
 
-    monkeypatch.setattr(dedup, "_release_rdds", recording)
+    monkeypatch.setattr(rounds, "_release_rdds", recording)
     # 6-node chain: diameter forces >=3 propagation rounds, so release fires
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], ["id_a", "id_b"]
