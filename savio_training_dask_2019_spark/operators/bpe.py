@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens as _tokens
-from .rounds import _checkpoint_rdd_ids, _release_rdds
+from .rounds import _release
 
 
 def _apply_merge(syms_col, left: str, right: str):
@@ -82,7 +82,6 @@ def bpe_train(
     collect; the corpus itself is never touched (see module docstring)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    sc = word_counts.sparkSession.sparkContext
     seg = word_counts.select(
         "word", "wc", F.split(F.col("word"), "").alias("syms")
     ).localCheckpoint(eager=True)
@@ -111,7 +110,7 @@ def bpe_train(
         nxt = seg.select(
             "word", "wc", _apply_merge(F.col("syms"), row["l"], row["r"]).alias("syms")
         ).localCheckpoint(eager=True)
-        _release_rdds(sc, _checkpoint_rdd_ids(seg))
+        _release(seg)
         seg = nxt
     return merges, seg
 

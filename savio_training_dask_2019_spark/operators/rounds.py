@@ -24,14 +24,9 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 
 
-def _checkpoint_rdd_ids(df: DataFrame) -> set:
-    """The id of the RDD behind an eagerly ``localCheckpoint``-ed frame —
-    the one :func:`_release_rdds` frees once the frame is superseded."""
-    return {df._jdf.logicalPlan().rdd().id()}
-
-
-def _release_rdds(sc, ids: set) -> None:
-    """Unpersist checkpoint blocks by RDD id via
+def _release(df: DataFrame) -> None:
+    """Free the checkpoint at the root of an eagerly ``localCheckpoint``-ed
+    frame: unpersist its ``LogicalRDD``'s RDD by id via
     ``JavaSparkContext.getPersistentRDDs``. ``Dataset.unpersist()`` on a
     ``localCheckpoint``-ed frame is a **no-op** — the checkpoint RDD is
     persisted at RDD level and never registered with the Dataset cache
@@ -40,11 +35,10 @@ def _release_rdds(sc, ids: set) -> None:
     ineffective, it targets the derived Row-conversion RDD). Iterative
     loops must therefore free superseded rounds through the RDD registry
     or leak one snapshot per round until the ContextCleaner GCs them."""
-    reg = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = reg.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
+    rid = df._jdf.logicalPlan().rdd().id()
+    jrdd = df.sparkSession.sparkContext._jsc.getPersistentRDDs().get(rid)
+    if jrdd is not None:
+        jrdd.unpersist(False)
 
 
 @contextmanager
@@ -56,7 +50,7 @@ def checkpointed(df: DataFrame) -> Iterator[DataFrame]:
     try:
         yield cp
     finally:
-        _release_rdds(cp.sparkSession.sparkContext, _checkpoint_rdd_ids(cp))
+        _release(cp)
 
 
 def iterate(
@@ -71,10 +65,9 @@ def iterate(
     replaced is released (the module's release rule). When ``until`` is
     given and returns true for a new state, the loop stops there. Returns
     the last state, whose checkpoint stays registered."""
-    sc = state.sparkSession.sparkContext
     for i in range(1, rounds + 1):
         nxt = step(state, i).localCheckpoint(eager=True)
-        _release_rdds(sc, _checkpoint_rdd_ids(state))
+        _release(state)
         state = nxt
         if until is not None and until(state):
             break

@@ -285,9 +285,12 @@ def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
     round their successor superseded, and any edge list they checkpoint,
     as pagerank does: building the catalog query (the loops run eagerly)
     grows the persistent-RDD registry by at most the one checkpoint the
-    result reads, and the result still collects from it. The count is
-    taken after the bench loop's cache reset: dedup_clusters' n-gram pair
-    tier holds a Dataset cache of its index, which is not a round.
+    result reads, and the result still collects from it. dedup_clusters
+    alone is counted after ``clearCache()`` (which leaves RDD-level
+    checkpoints registered): its n-gram pair tier leaves a Dataset cache
+    of its inverted index behind, which is not a round. The
+    ``caller_cache`` case counts connected_components' own edge cache
+    without that reset.
 
     ``caller_cache``: connected_components, connected_components_star and
     kcore_peel over one lazily ``persist()``-ed edge list, which the first
@@ -298,7 +301,7 @@ def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
         connected_components_star,
     )
     from savio_training_dask_2019_spark.operators.graph import kcore_peel
-    from savio_training_dask_2019_spark.queries import QUERIES, vectorops
+    from savio_training_dask_2019_spark.queries import QUERIES
 
     sc = spark.sparkContext
 
@@ -308,8 +311,8 @@ def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
     before = registered()
     if query != "caller_cache":
         out = QUERIES[query](spark, sf_dir)
-        spark.catalog.clearCache()
-        vectorops.invalidate_cached_indexes()
+        if query == "dedup_clusters":
+            spark.catalog.clearCache()
         assert len(registered() - before) <= 1
         assert out.count() > 0
         return

@@ -261,20 +261,20 @@ def test_cc_releases_only_checkpoints(spark, monkeypatch):
     """Per-round block release must free ONLY the superseded round's
     localCheckpoint RDD — never the shared adjacency cache. persist() is
     lazy, so the round-0 eager checkpoint is what first computes the sym
-    cache; a release set taken as a before/after registry diff would
-    capture that cache id and evict the shared edge union, and every later
-    round would recompute it.
-    Pin: each _release_rdds call receives exactly one id (the checkpoint)."""
+    cache; a release that picked its RDD out of the registry rather than
+    from the superseded frame itself could evict that cached edge union,
+    and every later round would recompute it.
+    Pin: every frame handed to _release is rooted at a local checkpoint."""
     from savio_training_dask_2019_spark.operators import dedup, rounds
 
     released = []
-    real = rounds._release_rdds
+    real = rounds._release
 
-    def recording(sc, ids):
-        released.append(set(ids))
-        real(sc, ids)
+    def recording(df):
+        released.append(df._jdf.logicalPlan().rdd().isLocallyCheckpointed())
+        real(df)
 
-    monkeypatch.setattr(rounds, "_release_rdds", recording)
+    monkeypatch.setattr(rounds, "_release", recording)
     # 6-node chain: diameter forces >=3 propagation rounds, so release fires
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], ["id_a", "id_b"]
@@ -282,11 +282,10 @@ def test_cc_releases_only_checkpoints(spark, monkeypatch):
     got = {r["id"]: r["cluster_id"] for r in dedup.connected_components(edges).collect()}
     assert got == {i: 1 for i in range(1, 7)}
     assert len(released) >= 2, "expected multiple rounds to release blocks"
-    for ids in released:
-        assert len(ids) == 1, (
-            f"release set {ids} should hold only the superseded checkpoint RDD; "
-            "extra ids mean a lazily-persisted cache was captured and evicted"
-        )
+    assert all(released), (
+        "a released frame was not rooted at a local checkpoint; "
+        "a lazily-persisted cache would be evicted"
+    )
 
 
 def test_rp_lsh_finds_planted_near_dups_and_prunes(spark):
