@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens as _tokens
+from ..partitioning import pin_fanout
 from .rounds import iterate
 
 # Salt fan-out for hot-key join-backs whose build side is 1 row per key
@@ -649,24 +650,15 @@ def embedding_near_dup_pairs(
         exploded = unit.select("id", F.explode(keys).alias("key"))
         a, b = exploded.alias("a"), exploded.alias("b")
         # ids only through the candidate join + dedup (narrow rows); vectors
-        # re-attach afterwards — the wide payload never rides the pair shuffle
-        from ..session import shuffle_width
-
-        cand = (
+        # re-attach afterwards — the wide payload never rides the pair shuffle.
+        # The exact-cosine verify runs in the stage reading the pinned
+        # pair-dedup exchange (the vector re-joins broadcast).
+        pairs = (
             a.join(b, "key")
             .filter(F.col("a.id") < F.col("b.id"))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            # r19: pin the pair-dedup exchange at the session's shuffle
-            # width (the dedup aggregate reuses this exchange — no extra
-            # shuffle). The exact-cosine verify runs in the stage READING
-            # this exchange (the vector re-joins broadcast), so its
-            # partition count IS the verify's parallelism; AQE's
-            # bytes-based coalescing otherwise collapses the tiny id-pair
-            # exchange to 1 task under the per-pair fold (the fuzzy.py
-            # _substrings rationale, see session.shuffle_width).
-            .repartition(shuffle_width(df.sparkSession), "id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
         )
+        cand = pin_fanout(pairs, "id_a", "id_b").dropDuplicates(["id_a", "id_b"])
         va = unit.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
         vb = unit.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
         return (

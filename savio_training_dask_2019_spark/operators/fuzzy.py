@@ -33,13 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _fanout_width(df: DataFrame) -> int:
-    """Partition count pinned onto the substring-dedup exchange — the
-    session's declared shuffle width (see session.shuffle_width)."""
-    from ..session import shuffle_width
-
-    return shuffle_width(df.sparkSession)
+from ..partitioning import pin_fanout, spread
 
 
 def _seg_len(i: str, length: str, k: int) -> str:
@@ -57,19 +51,10 @@ def _seg_pos(i: str, length: str, k: int) -> str:
 
 
 def _prep(df: DataFrame, id_col: str, str_col: str, k: int) -> DataFrame:
-    """Project to (id, s, L) and SPREAD to at least defaultParallelism
-    partitions. The spread matters because everything downstream —
-    substring generation (three nested explodes), the block join probe,
-    and the banded verify in the join stage — is narrow and inherits the
-    scan's partitioning: a single-row-group fixture file otherwise runs
-    the whole candidate pipeline on 1-2 tasks (measured r18: the sf0.1
-    block join + verify sat at 2 tasks, 12.5 s; spread, it uses every
-    core). At corpus scale the scan already has >= cores partitions and
-    the repartition is a no-op decision (the ensure_min_partitions
-    contract, sources/parquet.py)."""
-    from ..sources.parquet import ensure_min_partitions
-
-    return ensure_min_partitions(
+    """Project to (id, s, L) and ``spread``: substring generation, the
+    block join probe and the banded verify are all narrow and inherit
+    this frame's partitioning."""
+    return spread(
         df.select(F.col(id_col).alias("id"), F.col(str_col).alias("s"))
         .filter(F.length("s") > k)
         .withColumn("L", F.length("s"))
@@ -101,7 +86,7 @@ def _substrings(s: DataFrame, k: int) -> DataFrame:
     within ±k of that segment's position in an La-length string.  (The
     paper's multi-match-aware window is tighter; the plain ±k window is a
     superset, so completeness is preserved.)"""
-    return (
+    subs = (
         s.select(
             "id",
             "s",
@@ -138,27 +123,13 @@ def _substrings(s: DataFrame, k: int) -> DataFrame:
             F.col("La"),
             F.expr("substring(s, start + 1, sl)").alias("blk"),
         )
-        # a string can emit the same (i, La, blk) through several shifts —
-        # collapse before the join so each block pairing happens once.
-        # r19: the dedup's exchange is PINNED at the session's shuffle width
-        # (REPARTITION_BY_NUM on the dedup keys — the aggregate reuses this
-        # exchange, so it replaces rather than adds a shuffle). Rationale:
-        # while the other side broadcasts (toy scale), the block join runs
-        # IN THE SAME STAGE as this exchange's read, so the exchange's
-        # partition count IS the parallelism of the join fan-out +
-        # banded-verify compute — the query's dominant term, invisible to
-        # AQE's bytes-based coalescing because it happens after the
-        # shuffle read. At corpus scale the pin does NOT co-partition the
-        # join: it is keyed (id, i, La, blk) and the join on (i, La, blk),
-        # so a shuffle join re-partitions both sides and the pin then sets
-        # only the dedup's width (measured at toy scale: AQE
-        # coalesced this sub-MB exchange to 1 task and fuzzy_join ran
-        # 16.9 s; pinned at the shuffle width it runs the verify on every
-        # core). This was r18's global minPartitionSize=64k floor, scoped
-        # to the one operator that needs it (VERDICT r18 #1).
-        .repartition(_fanout_width(s), "id", "i", "La", "blk")
-        .dropDuplicates(["id", "i", "La", "blk"])
     )
+    # a string can emit the same (i, La, blk) through several shifts —
+    # collapse before the join so each block pairing happens once. The
+    # block join runs in the stage reading this exchange while the other
+    # side broadcasts, so the dedup's exchange is pinned.
+    keys = ["id", "i", "La", "blk"]
+    return pin_fanout(subs, *keys).dropDuplicates(keys)
 
 
 def _candidate_ids(seg: DataFrame, sub: DataFrame) -> DataFrame:

@@ -43,7 +43,8 @@ from ..functions.text import (
     token_count,
     tokens,
 )
-from ..sources import load_table, load_table_spread
+from ..partitioning import spread
+from ..sources import load_table
 
 # DuckDB twin of functions.text.tokens() (kept in sync with textops.py)
 _DUCK_TOKENS = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
@@ -90,7 +91,7 @@ def q_decontam_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.decontam import contamination_report
 
-    base = load_table_spread(spark, sf_dir, "documents")
+    base = spread(load_table(spark, sf_dir, "documents"))
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     return contamination_report(
         base.where(~is_eval), base.where(is_eval), "text", "doc_id", n=_SHINGLE_N
@@ -131,7 +132,7 @@ def q_decontam_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins the survivor set exactly."""
     from ..operators.decontam import decontaminate
 
-    base = load_table_spread(spark, sf_dir, "documents")
+    base = spread(load_table(spark, sf_dir, "documents"))
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     survivors = decontaminate(
         base.where(~is_eval), base.where(is_eval), "text", "doc_id",
@@ -191,7 +192,7 @@ def q_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.decontam import bloom_contamination_report
 
-    base = load_table_spread(spark, sf_dir, "documents")
+    base = spread(load_table(spark, sf_dir, "documents"))
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     return bloom_contamination_report(
         base.where(~is_eval), base.where(is_eval), "text", "doc_id",
@@ -216,7 +217,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram fraction ≤ 0.10. Per-language pass counts — the corpus-curation
     dashboard number. All four signals are codegen'd array expressions; the
     whole query is one scan + one O(langs) aggregation at any corpus size."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     tk = tokens("text")
     passes = (
         token_count("text").between(50, 100_000)
@@ -288,7 +289,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chunk_idx = (start-1) // stride, exact because starts are 1+k·stride)."""
     from ..operators.packing import chunk_tokens
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     return chunk_tokens(
         d, "text", "doc_id", size=_CHUNK_SIZE, stride=_CHUNK_STRIDE
     )
@@ -577,13 +578,13 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying only (id, source, 16-byte hash) — never text — then an
     O(sources) aggregation. The production twin reads two partitioned
     snapshot manifests instead of carving one table."""
-    d = load_table_spread(spark, sf_dir, "documents").select(
+    d = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", F.md5("text").alias("h")
     )
     old = d.where(
         (F.col("doc_id") % _SNAP_MOD != 0) | (F.col("doc_id") % _SNAP_EDIT == 0)
     )
-    new = load_table_spread(spark, sf_dir, "documents").select(
+    new = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         "source",
         F.when(
@@ -660,7 +661,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged when strata are huge)."""
     from ..operators.sampling import weighted_sample_exact
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     return weighted_sample_exact(
         d.select("doc_id", "source", "n_chars"),
         "source", "doc_id", "n_chars", _WS_QUOTA,
@@ -701,7 +702,7 @@ def q_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language repeated-bigram profile (avg and worst-case duplicate
     fraction): the intra-document repetition signal used to drop
     boilerplate/spam before training. Narrow map + O(langs) agg."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     frac = F.round(_dup_bigram_frac(tokens("text")), 4)
     return d.groupBy("lang").agg(
         F.round(F.avg(frac), 4).alias("avg_dup_frac"),
@@ -735,7 +736,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles at all; the only exchange is the O(langs) final
     agg. This replaced an r9-draft bigram-explode → groupBy(doc, bg)
     formulation whose shuffle carried the whole bigram stream."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     base = d.select("lang", tokens("text").alias("tk"))
     # longest run in the SORTED bigram array == the most frequent bigram;
     # strictly-greater replacement keeps the earliest (lexicographically
@@ -868,7 +869,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so anchor patterns (``\\b``, explicit char classes) and avoid
     catastrophic-backtracking constructs (Java regex is backtracking; the
     subset here is linear)."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     did = F.col("doc_id")
     email = F.concat(
         F.lit(" contact user"), did.cast("string"), F.lit("@example.com today")
@@ -984,7 +985,7 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 1e7 chunks/shard), so the string-keyed DuckDB oracle still matches
     bit-for-bit."""
     d = (
-        load_table_spread(spark, sf_dir, "documents")
+        spread(load_table(spark, sf_dir, "documents"))
         .select("doc_id", "source", tokens("text").alias("tk"))
         .where(F.size("tk") > 0)
     )
@@ -1056,7 +1057,7 @@ def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.dedup.substring_dup_removal`` for the documented trade and
     the 128-bit upgrade path."""
     d = (
-        load_table_spread(spark, sf_dir, "documents")
+        spread(load_table(spark, sf_dir, "documents"))
         .select("doc_id", "lang", tokens("text").alias("tk"))
         .where(F.size("tk") > 0)
     )
@@ -1193,7 +1194,7 @@ def q_substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows; see ``operators.dedup.substring_dup_removal`` for the
     documented trade and the 128-bit upgrade path."""
     d = (
-        load_table_spread(spark, sf_dir, "documents")
+        spread(load_table(spark, sf_dir, "documents"))
         .select("doc_id", "lang", tokens("text").alias("tk"))
         .where(F.size("tk") >= _SPAN_W)
     )
@@ -1290,12 +1291,12 @@ def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import substring_dup_removal
 
     d = (
-        load_table_spread(spark, sf_dir, "documents")
+        spread(load_table(spark, sf_dir, "documents"))
         .select("doc_id", "lang", tokens("text").alias("tk"))
         .where(F.size("tk") >= _SPAN_W)
     )
     per_doc = substring_dup_removal(
-        load_table_spread(spark, sf_dir, "documents"),
+        spread(load_table(spark, sf_dir, "documents")),
         "text",
         "doc_id",
         span_w=_SPAN_W,
@@ -1403,7 +1404,7 @@ def q_substring_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary, one id-keyed join beyond the accounting pipeline)."""
     from ..operators.dedup import substring_dup_scrub
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     out = substring_dup_scrub(d, "text", "doc_id", span_w=_SPAN_W, keep_cols=("lang",))
     return out.select(
         F.col("id").alias("doc_id"), "lang", "n_tok", "removed", "scrubbed_text"
@@ -1500,7 +1501,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle twin's identical LIMIT/COALESCE branches never fire."""
     from ..operators.lm import fit_unigram_lm, score_unigram_nll
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     model, total = fit_unigram_lm(d, "text", top_k=_VOCAB_TOP_K)
     scored = score_unigram_nll(d, model, total, "text", keys=("doc_id", "lang"))
     return scored.groupBy("lang").agg(
@@ -1556,7 +1557,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs near the boundary."""
     from ..operators.lm import fit_unigram_lm
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     is_target = F.col("doc_id") % _EVAL_MOD == 0
     target, source = d.where(is_target), d.where(~is_target)
     m_t, tot_t = fit_unigram_lm(target, "text", top_k=_VOCAB_TOP_K)
@@ -1656,7 +1657,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror in the oracle, so the twins stay exact."""
     from ..operators.lm import fit_bigram_lm, score_bigram_nll
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     model, total = fit_bigram_lm(d, "text", top_k=_BIGRAM_TOP_K)
     scored = score_bigram_nll(d, model, total, "text", keys=("doc_id", "lang"))
     return scored.groupBy("lang").agg(
@@ -1813,7 +1814,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.dedup import keep_best_by_hash
 
-    d = load_table_spread(spark, sf_dir, "documents").select("doc_id", planted.alias("t"))
+    d = spread(load_table(spark, sf_dir, "documents")).select("doc_id", planted.alias("t"))
     return keep_best_by_hash(
         d, "t", "doc_id", score=F.length("t")
     ).withColumnRenamed("kept_score", "kept_chars")
@@ -1875,7 +1876,7 @@ def q_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source", "left_anti")`) — the corpus never shuffles. Giant-domain skew
     is absorbed by map-side partial aggregation (per-partition partials are
     O(distinct sources), commutative sums)."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     per_src = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -1930,7 +1931,7 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     language); the two global normalizers (Σ tokens, Σ tokens^α) come from
     a 1-row aggregate of that O(langs) table, joined back broadcast — no
     driver round-trip, no unpartitioned window."""
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     per_lang = d.groupBy("lang").agg(
         F.sum(token_count("text")).cast("bigint").alias("lang_tokens")
     )
@@ -2000,7 +2001,7 @@ def q_ccnet_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary."""
     from ..operators.lm import fit_unigram_lm, score_unigram_nll
 
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     model, total = fit_unigram_lm(d, "text", top_k=_VOCAB_TOP_K)
     scored = score_unigram_nll(d, model, total, "text", keys=("doc_id", "lang"))
     scored = scored.select("doc_id", "lang", F.round("nll", 4).alias("nll_r"))
@@ -2111,7 +2112,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         did % 29 == 0,
         F.md5(F.concat(F.lit("planted-"), (did % 5).cast("string"))),
     ).otherwise(F.md5("text"))
-    d = load_table_spread(spark, sf_dir, "documents").select(
+    d = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", h.alias("h")
     )
     hist = d.where(F.col("doc_id") % _BATCH_MOD != 0).select("h").distinct()
@@ -2162,7 +2163,7 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         did % 29 == 0,
         F.md5(F.concat(F.lit("planted-"), (did % 5).cast("string"))),
     ).otherwise(F.md5("text"))
-    d = load_table_spread(spark, sf_dir, "documents").select(
+    d = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", h.alias("h")
     )
     hist = d.where(F.col("doc_id") % _BATCH_MOD != 0).select("h").distinct()
@@ -2248,7 +2249,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``row_number`` window runs over ≤ max(K) rows — bounded by the constant
     K grid, not by data size."""
     counts = (
-        load_table_spread(spark, sf_dir, "documents")
+        spread(load_table(spark, sf_dir, "documents"))
         .select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))

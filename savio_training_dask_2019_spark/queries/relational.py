@@ -11,7 +11,7 @@ every small dimension side is broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.fuzzy import edit_distance_join, edit_distance_lookup
@@ -28,7 +28,7 @@ from ..operators.graph import (
     sssp_oracle_cte,
 )
 from ..operators.ranges import banded_range_join
-from ..session import shuffle_width
+from ..partitioning import pin_fanout
 from ..sources import load_table
 
 
@@ -1217,16 +1217,26 @@ SELECT l_orderkey, l_linenumber, 'l_tax',
 _PR_ITERS = 5
 
 
-def _trade_pairs(spark: SparkSession, sf_dir: str, count: str | None = None) -> DataFrame:
-    """The supplier–customer trade graph's pairs ``(a, b)``: supplier
-    ``suppkey*2`` and customer ``custkey*2+1`` for every lineitem ⋈ order.
-    Distinct pairs by default; with ``count``, one row per pair carrying
-    its number of lineitems in that column."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+def _trade_lines(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """The supplier–customer trade graph's raw rows ``(c, s, *extra)``, one
+    per lineitem ⋈ order: customer ``o_custkey``, supplier ``l_suppkey``,
+    and each ``extra`` (an aliased lineitem expression, computed before the
+    join)."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", *extra)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-    a = (F.col("l_suppkey") * 2).alias("a")
-    b = (F.col("o_custkey") * 2 + 1).alias("b")
+    return li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
+        F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"), *li.columns[2:]
+    )
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str, count: str | None = None) -> DataFrame:
+    """The trade graph's pairs ``(a, b)``: supplier ``s*2`` and customer
+    ``c*2+1`` of ``_trade_lines``. Distinct pairs by default; with
+    ``count``, one row per pair carrying its number of lineitems in that
+    column."""
+    j = _trade_lines(spark, sf_dir)
+    a = (F.col("s") * 2).alias("a")
+    b = (F.col("c") * 2 + 1).alias("b")
     if count is None:
         return j.select(a, b).distinct()
     return j.groupBy(a, b).agg(F.count(F.lit(1)).alias(count))
@@ -4528,19 +4538,13 @@ def q_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     promiscuous-customer cap (drop c with deg above a threshold) is the
     standard lever when the hot-key fan-out bites — RA already discounts
     those neighbors to ~0, so the cap loses almost nothing."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # r18 (guide §2.4): ONE exchange keyed on the blocking key feeds the
     # whole pre-pair pipeline. hash(c) partitioning satisfies the (c, s)
     # dedup's clustering, is preserved through the checkpoint, and is
     # reused by the customer-degree agg, the degree attach AND both pair
     # self-join sides — previously each of those planned its own shuffle.
-    # The explicit partition count (see session.shuffle_width) keeps AQE
-    # from coalescing the tiny toy input below the fan-out's parallelism.
     e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .repartition(shuffle_width(spark), "c")
+        pin_fanout(_trade_lines(spark, sf_dir), "c")
         .dropDuplicates(["c", "s"])
         .localCheckpoint(eager=True)
     )
@@ -4632,14 +4636,7 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel gather shape); the edge list is localCheckpoint-ed (both
     adjacency directions + starts read it); walks×hops rows total, output
     2·|suppliers|."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _trade_lines(spark, sf_dir).distinct().localCheckpoint(eager=True)
     adj_sc = e.select(
         F.col("s").alias("node"),
         F.col("c").alias("nbr"),
@@ -5005,17 +5002,10 @@ def q_weighted_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deg fan-out filtered to the landed range — the random_walks gather
     shape); the weighted edge list is built by one (c, s) groupBy and
     localCheckpoint-ed (both directions + starts read it)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_suppkey",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
     we = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
+        _trade_lines(spark, sf_dir, cents)
+        .groupBy("c", "s")
         .agg(F.sum("cents").cast("bigint").alias("w"))
         .localCheckpoint(eager=True)
     )
@@ -5179,14 +5169,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy — the Pregel gather shape on alternating
     sides; the edge list is localCheckpoint-ed (read four times);
     TakeOrderedAndProject top-20."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _trade_lines(spark, sf_dir).distinct().localCheckpoint(eager=True)
     hub = e.select("s").distinct().withColumn(
         "h", F.lit(1).cast("bigint")
     )

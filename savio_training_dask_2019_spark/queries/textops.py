@@ -31,7 +31,8 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
-from ..sources import load_table, load_table_spread
+from ..partitioning import spread
+from ..sources import load_table
 
 # DuckDB twin of functions.text.tokens()
 _DUCK_TOKENS = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
@@ -1404,11 +1405,8 @@ def q_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the shingle explode + type groupBy is the ngram_jaccard
     index shuffle; everything after is bucket-table-sized."""
     from ..operators.dedup import word_shingles
-    from ..sources import load_table_spread
 
-    # spread: the shingle construction is expression-heavy and the fixture
-    # file is one row group — without the spread it runs in one task
-    d = load_table_spread(spark, sf_dir, "documents")
+    d = spread(load_table(spark, sf_dir, "documents"))
     sh = word_shingles(d, "text", "doc_id", n=3)
     first = sh.groupBy("shingle").agg(F.min("id").alias("fd"))
     b = (

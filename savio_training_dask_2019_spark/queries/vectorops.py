@@ -21,7 +21,8 @@ from ..operators.similarity import (
     ivf_query,
     lsh_knn,
 )
-from ..sources import load_table, load_table_spread
+from ..partitioning import spread
+from ..sources import load_table
 
 # DuckDB: cast float32 list → double list before any math, mirroring as_double.
 _DD = "list_transform({col}, x -> CAST(x AS DOUBLE))"
@@ -363,7 +364,7 @@ def q_knn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the margin check is the thing to re-run."""
     from ..operators.similarity import cell_knn_join
 
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = emb.where((F.col("vec_id") % _CELL_MOD) == 0).select(
         F.col("vec_id").alias("cid"), as_double(F.col("embedding")).alias("ce")
     )
@@ -440,7 +441,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query, neighbor) + a per-query agg."""
     from ..operators.similarity import cell_knn_join
 
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = emb.where((F.col("vec_id") % _CELL_MOD) == 0).select(
         F.col("vec_id").alias("cid"), as_double(F.col("embedding")).alias("ce")
     )
@@ -540,9 +541,7 @@ FROM embeddings
 
 def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact tier (oracle-checked)."""
-    # r18: spread — the O(n²) pairwise scoring otherwise runs on the
-    # fixture scan's single partition (45 s single-task at sf0.1)
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     return embedding_near_dup_pairs(emb, "embedding", "vec_id", min_cosine=0.45, method="brute")
 
 
@@ -569,7 +568,7 @@ def q_emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-band rp tier at a REAL near-dup threshold (0.9). Each planted pair
     must come back (recall pytest-pinned ≥ 48/50); random pairs are pruned
     by the 8-bit AND bands before any cosine is computed."""
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     v = as_double(F.col("embedding"))
     planted = emb.filter(F.col("vec_id") < 50).select(
         (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
@@ -607,7 +606,7 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine to an earlier same-cluster vector is >= the threshold; report
     per-cluster retention. The pairwise term is confined to single clusters
     — the SemDeDup scaling argument — so cost is Σ|cluster|², never n²."""
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     kept = semantic_dedup(
         emb, "embedding", "vec_id", "label", min_cosine=_SEMDEDUP_COS
     )
@@ -677,7 +676,7 @@ def q_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing to a corpus×corpus join."""
     from ..operators.similarity import assign_cells
 
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = emb.where((F.col("vec_id") % _CELL_MOD) == 0).select(
         F.col("vec_id").alias("cid"), as_double(F.col("embedding")).alias("ce")
     )
@@ -827,12 +826,8 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distance table with the same sequential sums and sums the m
     entries in subspace order (list(d2 ORDER BY sub) → list_sum)."""
     from ..operators.similarity import pq_adc_topk, pq_encode
-    from ..sources import load_table_spread
 
-    # spread: the encode fold is expression-heavy (|codebook|·dim mults per
-    # row, interpreted HOFs), so a single-row-group fixture file must not
-    # serialize it onto one task — 6.3x on the r9 measurement
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cb_df = emb.where(
         ((F.col("vec_id") % _PQ_CB_MOD) == 0) & (F.col("vec_id") < _PQ_ADC_CB_CAP)
     ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
@@ -899,9 +894,8 @@ def q_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked end-to-end, not just its stages. Top-10 by (adc asc,
     vec_id); see operators.similarity.ivfpq_topk."""
     from ..operators.similarity import ivfpq_topk
-    from ..sources import load_table_spread
 
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = emb.where((F.col("vec_id") % _CELL_MOD) == 0).select(
         F.col("vec_id").alias("cid"), as_double(F.col("embedding")).alias("ce")
     )
@@ -936,9 +930,8 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end. Returns (vec_id, cell, adc, cosine) by (cosine desc,
     vec_id)."""
     from ..operators.similarity import ivfpq_topk
-    from ..sources import load_table_spread
 
-    emb = load_table_spread(spark, sf_dir, "embeddings")
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
     cents = emb.where((F.col("vec_id") % _CELL_MOD) == 0).select(
         F.col("vec_id").alias("cid"), as_double(F.col("embedding")).alias("ce")
     )

@@ -27,16 +27,9 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
-    # r19: the r18 global AQE floor (coalescePartitions.minPartitionSize=64k)
-    # is GONE. It helped exactly one shape — a tiny exchange feeding a
-    # fan-out join (fuzzy verify) — but multiplied the task count of every
-    # small exchange by up to 16×, a cost that grows with core count: the
-    # r18 driver run regressed 25/41 headline rows at 32 cores (geomean
-    # 0.81, and the 8-core suite beat the 32-core one). The fan-out shapes
-    # that need post-shuffle parallelism now pin it LOCALLY with an explicit
-    # keyed repartition at the session's declared shuffle width
-    # (operators/fuzzy.py); every other exchange keeps AQE's default
-    # bytes-based coalescing.
+    # No global AQE partition floor: the fan-out exchanges that need
+    # post-shuffle parallelism pin it locally (partitioning.pin_fanout,
+    # whose module docstring records why r18's global floor was removed).
     # InferFiltersFromGenerate synthesizes `size(arr) > 0 AND isnotnull(arr)`
     # from every explode(), and predicate pushdown then drags the FULL array
     # expression below the nearest exchange — for this engine's text/array
@@ -98,28 +91,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def shuffle_width(spark: SparkSession) -> int:
-    """The session's declared shuffle width (``spark.sql.shuffle.partitions``),
-    capped at ``4 × defaultParallelism``, and falling back to
-    ``defaultParallelism`` when the conf is non-numeric (vendor runtimes
-    hold e.g. "auto" — ADVICE r18 #2). The cap matters under a session we
-    did not create: Spark's stock 200 would otherwise pin every tiny
-    fan-out exchange at 200 tasks on a few cores.
-
-    Used by the fan-out operators (PassJoin verify, LSH candidate verify) to
-    PIN their pair-verify exchange: those exchanges carry a few MB of keys
-    but their read-side stage runs the join fan-out + per-pair verify — the
-    query's dominant compute, invisible to AQE's bytes-based coalescing,
-    which otherwise collapses the stage to 1-3 tasks. Pinning at the
-    declared shuffle width sizes with the deployment (the knob a cluster
-    operator already tunes) instead of with fixture bytes."""
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        return min(int(spark.conf.get("spark.sql.shuffle.partitions")), 4 * cores)
-    except (TypeError, ValueError):
-        return cores
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -8,9 +8,7 @@ scale; Parquet footers are the only trusted inference path.
 
 from .parquet import (
     FIXTURE_TABLES,
-    ensure_min_partitions,
     load_table,
-    load_table_spread,
     load_tables,
     register_views,
 )
@@ -29,12 +27,10 @@ from .sinks import (
 __all__ = [
     "register_views",
     "write_bucketed_table",
-    "ensure_min_partitions",
     "read_orc",
     "write_orc",
     "FIXTURE_TABLES",
     "load_table",
-    "load_table_spread",
     "load_tables",
     "read_csv",
     "read_json_lines",

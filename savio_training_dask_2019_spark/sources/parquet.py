@@ -81,65 +81,6 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or FIXTURE_TABLES)}
 
 
-def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Spread a narrow-but-CPU-heavy pipeline across at least ``n``
-    partitions (default: the cluster's defaultParallelism).
-
-    Why it exists: parquet byte-range splitting is bounded by ROW-GROUP
-    granularity, so a small single-row-group file scans as ONE task no
-    matter what `spark.sql.files.minPartitionNum` asks for — and an
-    expression-heavy narrow map (n-gram shingling, per-token scoring) then
-    runs single-threaded (measured 7.3 s -> 0.6 s on decontam_check at
-    sf0.1). At real corpus scale the scan already has >= n partitions and
-    this is a NO-OP — the repartition only ever moves a toy-sized input, so
-    the helper is safe to leave in the operator path.
-
-    ADVICE r18 #1: the ``df.rdd.getNumPartitions()`` probe forces physical
-    planning, so the decision is memoized per (session, semantic plan, n) —
-    an operator called repeatedly on the same input (fuzzy ``_prep``, both
-    sides of a lookup build) pays the probe once. ``semanticHash`` needs
-    only the analyzed plan (one cheap py4j call); a hash collision could at
-    worst mis-spread a different plan — a perf wobble, never a correctness
-    one, same blast radius as the table-keyed cache below."""
-    if n is None:
-        n = df.sparkSession.sparkContext.defaultParallelism
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), n)
-    needs = _SPREAD_CACHE.get(key)
-    if needs is None:
-        needs = df.rdd.getNumPartitions() < n
-        _SPREAD_CACHE.put(key, needs)
-    return df.repartition(n) if needs else df
-
-
-# Memoized spread decisions: probing a scan's partition count costs a
-# Python→JVM physical-plan materialization (~10s of ms), and the answer is a
-# pure function of (session, plan, target width) — so pay it once per plan,
-# not once per operator call. Two key shapes share the cache (they can never
-# collide — different tuple arity): (appId, sf_dir, table, n) from
-# load_table_spread and (appId, semanticHash, n) from ensure_min_partitions.
-_SPREAD_CACHE: BoundedCache[tuple, bool] = BoundedCache(capacity=128)
-
-
-def load_table_spread(
-    spark: SparkSession, sf_dir: str, name: str, n: int | None = None
-) -> DataFrame:
-    """``load_table`` + ``ensure_min_partitions`` with the repartition
-    decision cached per (session, sf_dir, table, n). Narrow transforms
-    (select/filter/explode) applied after the returned scan keep the spread,
-    so expression-heavy pipelines use all cores even on single-row-group
-    fixture files; at real scale the decision is computed once, found to be
-    a no-op, and never probed again."""
-    if n is None:
-        n = spark.sparkContext.defaultParallelism
-    df = load_table(spark, sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name, n)
-    needs = _SPREAD_CACHE.get(key)
-    if needs is None:
-        needs = df.rdd.getNumPartitions() < n
-        _SPREAD_CACHE.put(key, needs)
-    return df.repartition(n) if needs else df
-
-
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
     """Register every fixture table as a temp view (``prefix + name``) so
     the whole corpus is drivable from plain ``spark.sql`` — the same

@@ -175,10 +175,10 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     "knn_ivf": (1, 0, 0, 0, (0, 0)),  # pure probe of the cached index
     "ngram_jaccard": (2, 0, 0, 4, (2, 2)),  # cached index; size tables broadcast
     "minhash_pairs": (1, 0, 0, 1, (3, 3)),  # ids-only pair exchange; sig/band joins broadcast
-    # r18: +1 spread exchange (load_table_spread — the 64-bit vote fold
+    # r18: +1 spread exchange (partitioning.spread — the 64-bit vote fold
     # otherwise runs on the fixture scan's single partition)
     "simhash_pairs": (1, 0, 0, 2, (1, 1)),
-    # r18: +2 spread exchanges (load_table_spread on the corpus scan, read
+    # r18: +2 spread exchanges (partitioning.spread on the corpus scan, read
     # by both the base and the planted-copy branch — the band projection
     # otherwise runs on the fixture's single scan partition; no-op at scale)
     "emb_near_dup_lsh": (2, 0, 0, 4, (3, 3)),
@@ -186,7 +186,7 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     "passage_dedup": (1, 0, 0, 3, (0, 0)),  # chunk-hash keep-first + agg
     "unigram_logprob": (2, 2, 2, 7, (3, 3)),  # 2 × broadcast 1-row total; model broadcast
     "bigram_logprob": (2, 1, 1, 7, (3, 3)),
-    # the corpus spread exchange (load_table_spread) replans in each
+    # the corpus spread exchange (partitioning.spread) replans in each
     # consuming branch of the static plan (kernel input, anti-join side,
     # totals); AQE reuses one exchange at runtime. The within-cluster
     # scoring is ONE hashpartitioning(__c) exchange feeding the per-cluster
@@ -199,7 +199,7 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     # BNLJ allowlist below — never a fact-side nested loop.
     "substring_dup_stats": (2, 0, 0, 8, (1, 1)),
     "substring_rebuild": (3, 0, 0, 5, (2, 2)),
-    # the corpus spread exchange (load_table_spread) under each fact branch
+    # the corpus spread exchange (partitioning.spread) under each fact branch
     # (corpus assign, query assign), the cell join's two sides and the top-k
     # window. The centroid model is collected at build and broadcast as a
     # variable to the assignment kernels, so it is no plan subtree: no
@@ -228,7 +228,7 @@ _HEADLINE_SHAPE: dict[str, tuple[int, int, int, int, tuple[int, int]]] = {
     # bcast floor 0. pagerank: the returned frame reads the final
     # iteration's checkpoint — every per-round shuffle ran eagerly at
     # build (drift_psi precedent), so the static plan is exchange-free.
-    # r18: +2 spread exchanges (ensure_min_partitions on each _prep side —
+    # r18: +2 spread exchanges (partitioning.spread on each _prep side —
     # toy-input-only round-robin of the slice, a no-op decision at scale;
     # the banded verify now runs map-side in the join stage so the pair
     # dedup exchange carries only true pairs, see operators/fuzzy.py)

@@ -4,6 +4,7 @@ join-side shuffle (the SCALING.md claims, pinned)."""
 
 from __future__ import annotations
 
+import re
 import uuid
 
 import pytest
@@ -108,11 +109,15 @@ def test_bucketed_join_has_no_join_shuffle(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {t2}")
 
 
-def test_shuffle_width_caps_external_session_default(spark):
+def test_shuffle_width_caps_external_session_default(spark, monkeypatch):
     """A session we did not create may hold Spark's stock 200: the
     fan-out pin width is capped at 4 × defaultParallelism, and a smaller
-    declared width is kept as it is."""
-    from savio_training_dask_2019_spark.session import shuffle_width
+    declared width is kept as it is. A non-numeric width (vendor runtimes
+    hold "auto", which stock Spark refuses to set) pins the fan-out
+    exchange at defaultParallelism."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from savio_training_dask_2019_spark.partitioning import pin_fanout, shuffle_width
 
     cores = spark.sparkContext.defaultParallelism
     key = "spark.sql.shuffle.partitions"
@@ -124,3 +129,62 @@ def test_shuffle_width_caps_external_session_default(spark):
         assert shuffle_width(spark) == 2
     finally:
         spark.conf.set(key, old)
+    conf_get = RuntimeConfig.get
+    monkeypatch.setattr(
+        RuntimeConfig, "get", lambda self, k, *a: "auto" if k == key else conf_get(self, k, *a)
+    )
+    plan = plans.formatted_plan(pin_fanout(spark.range(10), "id"))
+    assert re.search(rf"hashpartitioning\(id#\d+L, {cores}\)", plan), plan
+
+
+def test_spread_widens_narrow_frames_once(spark, monkeypatch):
+    """``spread`` round-robins a frame narrower than defaultParallelism to
+    exactly that width, hands a wide-enough frame back untouched, and
+    probes an equal plan's partition count once per session."""
+    from savio_training_dask_2019_spark import partitioning
+    from savio_training_dask_2019_spark.cache import BoundedCache
+
+    cores = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(partitioning, "_SPREAD", BoundedCache(capacity=128))
+    probes = []
+    frame = type(spark.range(1))
+    rdd = frame.rdd
+    probe = property(lambda df: probes.append(1) or rdd.__get__(df, frame))
+    monkeypatch.setattr(frame, "rdd", probe)
+
+    narrow = partitioning.spread(spark.range(0, 100, 1, 1))
+    again = partitioning.spread(spark.range(0, 100, 1, 1))
+    assert len(probes) == 1 and len(partitioning._SPREAD) == 1
+    assert narrow.rdd.getNumPartitions() == again.rdd.getNumPartitions() == cores > 1
+    wide = spark.range(0, 100, 1, cores)
+    assert partitioning.spread(wide) is wide
+
+
+def test_partitioning_module_owns_every_hand_shaped_exchange():
+    """Only ``partitioning.py`` picks a partition count or probes one: a
+    ``.repartition(`` or ``getNumPartitions`` call anywhere else in the
+    package fails here. ``from_pandas(npartitions=…)`` is the one
+    exception — the width is the caller's."""
+    import ast
+    import pathlib
+
+    import savio_training_dask_2019_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {
+        ("partitioning.py", "repartition"),
+        ("partitioning.py", "getNumPartitions"),
+        ("sources/pandas_io.py", "repartition"),
+    }
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("repartition", "getNumPartitions")
+                and (rel, node.func.attr) not in allowed
+            ):
+                found.append(f"{rel}:{node.lineno} {node.func.attr}")
+    assert not found, found
