@@ -13,6 +13,8 @@ Layout
 - ``operators``  : custom DataFrame-level operators Spark lacks natively
                    (as-of join, dedup family, similarity search, multimodal)
 - ``plans``      : physical-plan introspection helpers (pushdown/codegen checks)
+- ``workers``    : per-task overhead of the Python workers that run the
+                   package's kernels (imported here, so it acts on a worker)
 - ``streaming``  : Structured Streaming builders (windowed aggs, watermark smoke)
 - ``queries``    : the named-query catalog + DuckDB oracle SQL (the driver
                    contract surface for ``__spark_entry__.py``)
@@ -23,3 +25,5 @@ training exercises instead of file:line.
 """
 
 __version__ = "0.1.0"
+
+from . import workers  # noqa: F401,E402

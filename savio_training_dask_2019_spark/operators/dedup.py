@@ -16,6 +16,9 @@ Reference surface being generalized: ``drop_duplicates()`` (dask §2.2); tiers
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -304,7 +307,34 @@ def ngram_jaccard_pairs(
     materializes as distributed ROWS, never as an O(m²) in-memory array, and
     per-doc sizes re-derive from the same cached index. Three shuffles total
     (index build, pair count, size agg) and the tokenize+shingle scan runs
-    once, vs five shuffles + four scans for the naive self-join form."""
+    once, vs five shuffles + four scans for the naive self-join form.
+
+    The returned frame reads the cached index, which stays cached for it;
+    a caller that materializes what it needs inside a block uses
+    :func:`ngram_jaccard_edges`, which releases the index on exit."""
+    return _ngram_jaccard(df, text_col, id_col, n, threshold)[0]
+
+
+@contextmanager
+def ngram_jaccard_edges(
+    df: DataFrame, text_col: str, id_col: str, n: int = 3, threshold: float = 0.5
+) -> Iterator[DataFrame]:
+    """Yield :func:`ngram_jaccard_pairs` and unpersist its inverted index on
+    exit. Whatever the block returns must not read the pairs lazily:
+    :func:`connected_components` qualifies, its result reads only its last
+    eagerly checkpointed round."""
+    pairs, index = _ngram_jaccard(df, text_col, id_col, n, threshold)
+    try:
+        yield pairs
+    finally:
+        index.unpersist()
+
+
+def _ngram_jaccard(
+    df: DataFrame, text_col: str, id_col: str, n: int, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`ngram_jaccard_pairs`' pairs and the persisted inverted index
+    they read."""
     sh = word_shingles(df, text_col, id_col, n)
     # document frequency cap against boilerplate-shingle quadratic blowup
     max_df = 1000
@@ -330,7 +360,7 @@ def ngram_jaccard_pairs(
     common = pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_common"))
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
+    scored = (
         common.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
@@ -340,6 +370,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
+    return scored, index
 
 
 def minhash_near_dup_pairs(

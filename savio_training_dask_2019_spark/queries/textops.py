@@ -28,6 +28,7 @@ from ..operators.dedup import (
     exact_dedup_stats,
     keep_first_by_hash,
     minhash_banded_pairs,
+    ngram_jaccard_edges,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
@@ -594,8 +595,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation, operators.dedup.connected_components). Oracle: DuckDB
     recursive CTE computing the same min-reachable id."""
     d = load_table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.5)
-    cc = connected_components(edges)
+    with ngram_jaccard_edges(d, "text", "doc_id", n=3, threshold=0.5) as edges:
+        cc = connected_components(edges)
     return cc.select(F.col("id").alias("doc_id"), "cluster_id").orderBy("doc_id")
 
 
@@ -662,8 +663,8 @@ def q_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate mega-cluster is exactly the hot key the AQE/salting
     notes on the dedup tier cover."""
     d = load_table(spark, sf_dir, "documents")
-    edges = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.5)
-    cc = connected_components(edges)
+    with ngram_jaccard_edges(d, "text", "doc_id", n=3, threshold=0.5) as edges:
+        cc = connected_components(edges)
     j = cc.select(F.col("id").alias("doc_id"), "cluster_id").join(
         d.select("doc_id", "lang", "source", "n_chars"), "doc_id"
     )

@@ -275,22 +275,21 @@ def test_pagerank_leaves_one_checkpoint_registered(spark):
         "lpa_communities",
         "kcore_peel",
         "dedup_clusters",
+        "dedup_survivorship",
         "bpe_train_merges",
         "caller_cache",
     ],
 )
 def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
     """bfs_hops, sssp_bounded, label_propagation, kcore_peel,
-    connected_components (dedup_clusters) and bpe_train release every
-    round their successor superseded, and any edge list they checkpoint,
-    as pagerank does: building the catalog query (the loops run eagerly)
-    grows the persistent-RDD registry by at most the one checkpoint the
-    result reads, and the result still collects from it. dedup_clusters
-    alone is counted after ``clearCache()`` (which leaves RDD-level
-    checkpoints registered): its n-gram pair tier leaves a Dataset cache
-    of its inverted index behind, which is not a round. The
-    ``caller_cache`` case counts connected_components' own edge cache
-    without that reset.
+    connected_components (dedup_clusters, dedup_survivorship) and bpe_train
+    release every round their successor superseded, and any edge list they
+    checkpoint, as pagerank does: building the catalog query (the loops run
+    eagerly) grows the persistent-RDD registry by at most the one
+    checkpoint the result reads, and the result still collects from it.
+    For the two dedup queries this also counts the n-gram pair tier's
+    cached inverted index, released once connected_components has
+    materialized.
 
     ``caller_cache``: connected_components, connected_components_star and
     kcore_peel over one lazily ``persist()``-ed edge list, which the first
@@ -311,8 +310,6 @@ def test_graph_loops_release_superseded_rounds(spark, sf_dir, query):
     before = registered()
     if query != "caller_cache":
         out = QUERIES[query](spark, sf_dir)
-        if query == "dedup_clusters":
-            spark.catalog.clearCache()
         assert len(registered() - before) <= 1
         assert out.count() > 0
         return

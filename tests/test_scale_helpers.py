@@ -188,3 +188,37 @@ def test_partitioning_module_owns_every_hand_shaped_exchange():
             ):
                 found.append(f"{rel}:{node.lineno} {node.func.attr}")
     assert not found, found
+
+
+def test_workers_module_owns_the_import_cache_pin():
+    """Only ``workers.py`` touches the import machinery's caches: a name,
+    attribute, import or string constant ``zipimport`` or
+    ``invalidate_caches`` anywhere else in the package fails here."""
+    import ast
+    import pathlib
+
+    import savio_training_dask_2019_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = {"zipimport", "invalidate_caches"}
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "workers.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.alias):
+                names = node.name.split(".")
+            elif isinstance(node, ast.ImportFrom):
+                names = (node.module or "").split(".")
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                names = [node.value]
+            else:
+                continue
+            if banned & set(names):
+                found.append(f"{rel}:{getattr(node, 'lineno', '?')} {names}")
+    assert not found, found
