@@ -875,7 +875,9 @@ def connected_components(
 
     Min-label propagation: every node starts as its own label; each round
     takes the min of its own and its neighbors' labels; stop at fixpoint
-    (checked with a 1-number driver count per round) or ``max_iter``.
+    (checked with a 1-number driver count per round). ``max_iter`` rounds
+    without a fixpoint raise ``ValueError`` (the cap rule of
+    :mod:`.rounds`): the labels would be wrong, so none are returned.
     Rounds needed = graph diameter — near-dup clusters are small and dense
     (a handful of rounds), which is why this simple loop is the right scale
     choice here; corpora with long chain topologies want the large-star/
@@ -953,7 +955,8 @@ def connected_components_star(
     Convergence is detected with a one-scalar checksum action per round
     (count + xxhash64 bit_xor of the edge set — the same 1-number driver
     round-trip the propagation variant pays); at the fixed point the edge
-    set is a star forest centered at component minima.
+    set is a star forest centered at component minima; ``max_iter`` rounds
+    without one raise ``ValueError`` (the cap rule of :mod:`.rounds`).
 
     Each round's edge set is ``localCheckpoint``-ed by
     :func:`.rounds.iterate`, which releases the superseded round: one round

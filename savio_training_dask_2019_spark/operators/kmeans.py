@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..workers import bind
+
 
 def quantize_expr(vec_col: str, quant: int, offset: float):
     """Column: the integer-grid quantization of an array<float> column —
@@ -53,6 +55,49 @@ def quantize_expr(vec_col: str, quant: int, offset: float):
             (x.cast("double") + F.lit(float(offset))) * F.lit(float(quant))
         ).cast("bigint"),
     )
+
+
+def _partials(cids, C, c2, dim, batches):
+    """One Lloyd round's assignment and partial sums per Arrow batch of
+    quantized vectors, against the centroids ``C`` (ids ``cids``, squared
+    norms ``c2``) — the kernel of :func:`kmeans_lloyd_exact`'s rounds."""
+    import numpy as np
+    import pyarrow as pa
+
+    for batch in batches:
+        col = batch.column(0)
+        n = len(col)
+        if n == 0:
+            continue
+        # ADVICE r18 #3: to_numpy(zero_copy_only=False) on an int64 list
+        # array WITH NULLS yields float64 NaN, and the int64 cast below would
+        # turn NaN into INT64_MIN — a silently corrupted assignment. Fail
+        # loudly instead, matching the quantization guard's posture (ragged
+        # rows already throw on the reshape).
+        flat = col.flatten()
+        if col.null_count or flat.null_count:
+            raise ValueError(
+                "kmeans Arrow kernel: null vector or null component "
+                "in the quantized input — every row must carry a "
+                f"complete {dim}-dim int64 vector"
+            )
+        X = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+        X = np.ascontiguousarray(X, dtype=np.int64)
+        # argmin_c ||x-c||² == argmin_c (||c||² - 2 x·c), ints exact
+        cluster = np.argmin(c2[None, :] - 2 * (X @ C.T), axis=1)
+        counts = np.bincount(cluster, minlength=len(cids))
+        sums = np.zeros((len(cids), dim), dtype=np.int64)
+        np.add.at(sums, cluster, X)
+        nz = np.flatnonzero(counts)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(cids[nz], dim).astype(np.int32), pa.int32()),
+                pa.array(np.tile(np.arange(dim, dtype=np.int32), len(nz)), pa.int32()),
+                pa.array(sums[nz].reshape(-1), pa.int64()),
+                pa.array(np.repeat(counts[nz], dim).astype(np.int64), pa.int64()),
+            ],
+            ["cluster", "d0", "s", "n"],
+        )
 
 
 def kmeans_lloyd_exact(
@@ -126,55 +171,12 @@ def kmeans_lloyd_exact(
         c2 = (C * C).sum(axis=1)  # int64, exact
         dim = C.shape[1]
 
-        def partials(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                col = batch.column(0)
-                n = len(col)
-                if n == 0:
-                    continue
-                # ADVICE r18 #3: to_numpy(zero_copy_only=False) on an int64
-                # list array WITH NULLS yields float64 NaN, and the int64
-                # cast below would turn NaN into INT64_MIN — a silently
-                # corrupted assignment. Fail loudly instead, matching the
-                # quantization guard's posture (ragged rows already throw
-                # on the reshape).
-                flat = col.flatten()
-                if col.null_count or flat.null_count:
-                    raise ValueError(
-                        "kmeans Arrow kernel: null vector or null component "
-                        "in the quantized input — every row must carry a "
-                        f"complete {dim}-dim int64 vector"
-                    )
-                X = flat.to_numpy(zero_copy_only=False).reshape(n, dim)
-                X = np.ascontiguousarray(X, dtype=np.int64)
-                # argmin_c ||x-c||² == argmin_c (||c||² - 2 x·c), ints exact
-                cluster = np.argmin(c2[None, :] - 2 * (X @ C.T), axis=1)
-                counts = np.bincount(cluster, minlength=len(cids))
-                sums = np.zeros((len(cids), dim), dtype=np.int64)
-                np.add.at(sums, cluster, X)
-                nz = np.flatnonzero(counts)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.repeat(cids[nz], dim).astype(np.int32), pa.int32()
-                        ),
-                        pa.array(
-                            np.tile(np.arange(dim, dtype=np.int32), len(nz)),
-                            pa.int32(),
-                        ),
-                        pa.array(sums[nz].reshape(-1), pa.int64()),
-                        pa.array(
-                            np.repeat(counts[nz], dim).astype(np.int64), pa.int64()
-                        ),
-                    ],
-                    ["cluster", "d0", "s", "n"],
-                )
-
         return (
             q.select("qv")
-            .mapInArrow(partials, "cluster int, d0 int, s bigint, n bigint")
+            .mapInArrow(
+                bind(_partials, "partials", cids, C, c2, dim),
+                "cluster int, d0 int, s bigint, n bigint",
+            )
             .groupBy("cluster", "d0")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         )

@@ -21,8 +21,6 @@ produced here feed the similarity/dedup operators directly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -35,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..workers import bind
 
 #: Sidecar metadata schema carried next to every binary payload column.
 MEDIA_META_SCHEMA = StructType(
@@ -70,6 +70,22 @@ def pack_payload(df: DataFrame, src_col: str, mime: str, id_col: str) -> DataFra
     )
 
 
+def _decode(payload_col, id_col, batches):
+    """The per-batch kernel of :func:`decode_meta`."""
+    for pdf in batches:
+        p = pdf[payload_col]
+        n = p.map(len).astype("int64")
+        first = p.map(lambda b: b[0] if len(b) else 0).astype("int64")
+        yield pd.DataFrame(
+            {
+                "id": pdf[id_col],
+                "width": (64 + (n % 577)).astype("int32"),
+                "height": (64 + ((n * 31 + first) % 577)).astype("int32"),
+                "checksum": (n * 2654435761 % (1 << 31)).astype("int64"),
+            }
+        )
+
+
 def decode_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "id") -> DataFrame:
     """'Decode' each payload to (width, height, checksum) via mapInPandas.
 
@@ -78,22 +94,10 @@ def decode_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "id")
     payload bytes so the full Arrow round-trip stays testable and
     oracle-checkable. The batch shape, schema, and partitioning are exactly
     what a real decoder uses."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            p = pdf[payload_col]
-            n = p.map(len).astype("int64")
-            first = p.map(lambda b: b[0] if len(b) else 0).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "width": (64 + (n % 577)).astype("int32"),
-                    "height": (64 + ((n * 31 + first) % 577)).astype("int32"),
-                    "checksum": (n * 2654435761 % (1 << 31)).astype("int64"),
-                }
-            )
-
-    return df.mapInPandas(_decode, "id long, width int, height int, checksum long")
+    return df.mapInPandas(
+        bind(_decode, "_decode", payload_col, id_col),
+        "id long, width int, height int, checksum long",
+    )
 
 
 #: Raw uncompressed media model the pixel tier operates on: uint8 grayscale,
@@ -109,6 +113,26 @@ RAW8_VIDEO_MIME = "video/x-raw8"
 _RAW8_FPS = 4  # synthetic-video frame rate (frame every 250 ms)
 
 
+def _synth_images(src_col, id_col, batches):
+    """The per-batch kernel of :func:`synthesize_raw_images`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, payloads, ws, hs = [], [], [], []
+        for pid, s in zip(pdf[id_col], pdf[src_col]):
+            b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
+            n = len(b)
+            w, h = 16 + n % 17, 12 + (n * 31) % 13
+            src = np.frombuffer(b, dtype=np.uint8) if n else np.zeros(1, np.uint8)
+            ids.append(pid)
+            payloads.append(np.resize(src, w * h).tobytes())
+            ws.append(w)
+            hs.append(h)
+        yield pd.DataFrame(
+            {"id": ids, "payload": payloads, "width": ws, "height": hs}
+        )
+
+
 def synthesize_raw_images(
     df: DataFrame, src_col: str, id_col: str
 ) -> DataFrame:
@@ -118,26 +142,38 @@ def synthesize_raw_images(
     the source bytes tiled to width*height, so every byte of the payload
     is a genuine addressable pixel. Arrow-batched mapInPandas; one narrow
     pass, no shuffle."""
+    return df.mapInPandas(
+        bind(_synth_images, "_synth", src_col, id_col),
+        "id long, payload binary, width int, height int",
+    )
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            ids, payloads, ws, hs = [], [], [], []
-            for pid, s in zip(pdf[id_col], pdf[src_col]):
-                b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
-                n = len(b)
-                w, h = 16 + n % 17, 12 + (n * 31) % 13
-                src = np.frombuffer(b, dtype=np.uint8) if n else np.zeros(1, np.uint8)
-                ids.append(pid)
-                payloads.append(np.resize(src, w * h).tobytes())
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {"id": ids, "payload": payloads, "width": ws, "height": hs}
-            )
+def _resize(out_w, out_h, payload_col, width_col, height_col, id_col, batches):
+    """The per-batch kernel of :func:`resize_images`."""
+    import numpy as np
 
-    return df.mapInPandas(_synth, "id long, payload binary, width int, height int")
+    for pdf in batches:
+        ids, payloads, sums = [], [], []
+        for pid, buf, w, h in zip(
+            pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
+        ):
+            w, h = int(w), int(h)
+            img = np.frombuffer(buf, dtype=np.uint8, count=w * h).reshape(h, w)
+            ri = (np.arange(out_h) * h) // out_h
+            ci = (np.arange(out_w) * w) // out_w
+            res = img[ri][:, ci]
+            ids.append(pid)
+            payloads.append(res.tobytes())
+            sums.append(int(res.sum()))
+        yield pd.DataFrame(
+            {
+                "id": ids,
+                "payload": payloads,
+                "width": out_w,
+                "height": out_h,
+                "px_sum": sums,
+            }
+        )
 
 
 def resize_images(
@@ -161,35 +197,44 @@ def resize_images(
     if out_w < 1 or out_h < 1:
         raise ValueError(f"size must be positive, got {size}")
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, payloads, sums = [], [], []
-            for pid, buf, w, h in zip(
-                pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
-            ):
-                w, h = int(w), int(h)
-                img = np.frombuffer(buf, dtype=np.uint8, count=w * h).reshape(h, w)
-                ri = (np.arange(out_h) * h) // out_h
-                ci = (np.arange(out_w) * w) // out_w
-                res = img[ri][:, ci]
-                ids.append(pid)
-                payloads.append(res.tobytes())
-                sums.append(int(res.sum()))
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "payload": payloads,
-                    "width": out_w,
-                    "height": out_h,
-                    "px_sum": sums,
-                }
-            )
-
     return df.mapInPandas(
-        _resize, "id long, payload binary, width int, height int, px_sum long"
+        bind(
+            _resize, "_resize", out_w, out_h, payload_col, width_col, height_col, id_col
+        ),
+        "id long, payload binary, width int, height int, px_sum long",
     )
+
+
+def _synth_video(src_col, id_col, batches):
+    """The per-batch kernel of :func:`synthesize_raw_video`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, payloads, ws, hs, nf, dur = [], [], [], [], [], []
+        for pid, s in zip(pdf[id_col], pdf[src_col]):
+            b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
+            n = len(b)
+            w, h, frames = 8 + n % 9, 6 + (n * 31) % 7, 4 + n % 5
+            src = np.frombuffer(b, dtype=np.uint8) if n else np.zeros(1, np.uint8)
+            buf = np.concatenate(
+                [np.resize(np.roll(src, -k), w * h) for k in range(frames)]
+            )
+            ids.append(pid)
+            payloads.append(buf.tobytes())
+            ws.append(w)
+            hs.append(h)
+            nf.append(frames)
+            dur.append(frames * 1000 // _RAW8_FPS)
+        yield pd.DataFrame(
+            {
+                "id": ids,
+                "payload": payloads,
+                "width": ws,
+                "height": hs,
+                "n_frames": nf,
+                "duration_ms": dur,
+            }
+        )
 
 
 def synthesize_raw_video(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
@@ -197,41 +242,39 @@ def synthesize_raw_video(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
     grid at ``_RAW8_FPS``, pixel buffer tiled from the source bytes frame
     by frame (each frame offset by one byte so frames differ). Same
     fixture role as :func:`synthesize_raw_images`."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, payloads, ws, hs, nf, dur = [], [], [], [], [], []
-            for pid, s in zip(pdf[id_col], pdf[src_col]):
-                b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
-                n = len(b)
-                w, h, frames = 8 + n % 9, 6 + (n * 31) % 7, 4 + n % 5
-                src = np.frombuffer(b, dtype=np.uint8) if n else np.zeros(1, np.uint8)
-                buf = np.concatenate(
-                    [np.resize(np.roll(src, -k), w * h) for k in range(frames)]
-                )
-                ids.append(pid)
-                payloads.append(buf.tobytes())
-                ws.append(w)
-                hs.append(h)
-                nf.append(frames)
-                dur.append(frames * 1000 // _RAW8_FPS)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "payload": payloads,
-                    "width": ws,
-                    "height": hs,
-                    "n_frames": nf,
-                    "duration_ms": dur,
-                }
-            )
-
     return df.mapInPandas(
-        _synth,
+        bind(_synth_video, "_synth", src_col, id_col),
         "id long, payload binary, width int, height int, n_frames int, duration_ms long",
     )
+
+
+def _sample(step, payload_col, id_col, width_col, height_col, n_frames_col, batches):
+    """The per-batch kernel of :func:`sample_frames`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, idxs, ts, payloads, sums = [], [], [], [], []
+        for pid, buf, w, h, frames in zip(
+            pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col], pdf[n_frames_col]
+        ):
+            w, h, frames = int(w), int(h), int(frames)
+            vid = np.frombuffer(buf, dtype=np.uint8, count=frames * w * h)
+            for k in range(0, frames, step):
+                frame = vid[k * w * h : (k + 1) * w * h]
+                ids.append(pid)
+                idxs.append(k)
+                ts.append(k * 1000 // _RAW8_FPS)
+                payloads.append(frame.tobytes())
+                sums.append(int(frame.sum()))
+        yield pd.DataFrame(
+            {
+                "id": ids,
+                "frame_idx": idxs,
+                "t_ms": ts,
+                "payload": payloads,
+                "px_sum": sums,
+            }
+        )
 
 
 def sample_frames(
@@ -254,36 +297,34 @@ def sample_frames(
         raise ValueError(f"every_ms must be positive, got {every_ms}")
     step = max(1, every_ms * _RAW8_FPS // 1000)
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, idxs, ts, payloads, sums = [], [], [], [], []
-            for pid, buf, w, h, frames in zip(
-                pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col], pdf[n_frames_col]
-            ):
-                w, h, frames = int(w), int(h), int(frames)
-                vid = np.frombuffer(buf, dtype=np.uint8, count=frames * w * h)
-                for k in range(0, frames, step):
-                    frame = vid[k * w * h : (k + 1) * w * h]
-                    ids.append(pid)
-                    idxs.append(k)
-                    ts.append(k * 1000 // _RAW8_FPS)
-                    payloads.append(frame.tobytes())
-                    sums.append(int(frame.sum()))
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "frame_idx": idxs,
-                    "t_ms": ts,
-                    "payload": payloads,
-                    "px_sum": sums,
-                }
-            )
-
     return df.mapInPandas(
-        _sample, "id long, frame_idx int, t_ms long, payload binary, px_sum long"
+        bind(
+            _sample, "_sample", step,
+            payload_col, id_col, width_col, height_col, n_frames_col,
+        ),
+        "id long, frame_idx int, t_ms long, payload binary, px_sum long",
     )
+
+
+def _image_features(n_bins, payload_col, width_col, height_col, id_col, batches):
+    """The per-batch kernel of :func:`image_features`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, means, stds, hists = [], [], [], []
+        for pid, buf, w, h in zip(
+            pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
+        ):
+            px = np.frombuffer(buf, dtype=np.uint8, count=int(w) * int(h))
+            f = px.astype(np.float64)
+            ids.append(pid)
+            means.append(float(np.round(f.mean(), 4)))
+            stds.append(float(np.round(f.std(), 4)))
+            hist, _ = np.histogram(px, bins=n_bins, range=(0, 256))
+            hists.append([int(x) for x in hist])
+        yield pd.DataFrame(
+            {"id": ids, "px_mean": means, "px_std": stds, "hist": hists}
+        )
 
 
 def image_features(
@@ -305,27 +346,12 @@ def image_features(
     if not 1 <= n_bins <= 256:
         raise ValueError(f"n_bins must be in [1, 256], got {n_bins}")
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, means, stds, hists = [], [], [], []
-            for pid, buf, w, h in zip(
-                pdf[id_col], pdf[payload_col], pdf[width_col], pdf[height_col]
-            ):
-                px = np.frombuffer(buf, dtype=np.uint8, count=int(w) * int(h))
-                f = px.astype(np.float64)
-                ids.append(pid)
-                means.append(float(np.round(f.mean(), 4)))
-                stds.append(float(np.round(f.std(), 4)))
-                hist, _ = np.histogram(px, bins=n_bins, range=(0, 256))
-                hists.append([int(x) for x in hist])
-            yield pd.DataFrame(
-                {"id": ids, "px_mean": means, "px_std": stds, "hist": hists}
-            )
-
     return df.mapInPandas(
-        _features, "id long, px_mean double, px_std double, hist array<long>"
+        bind(
+            _image_features, "_features", n_bins,
+            payload_col, width_col, height_col, id_col,
+        ),
+        "id long, px_mean double, px_std double, hist array<long>",
     )
 
 
@@ -338,6 +364,35 @@ RAW_PCM16_MIME = "audio/x-raw-pcm16"
 _PCM16_RATE = 8000  # synthetic sample rate (Hz)
 
 
+def _synth_audio(src_col, id_col, batches):
+    """The per-batch kernel of :func:`synthesize_raw_audio`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, payloads, ns, durs = [], [], [], []
+        for pid, s in zip(pdf[id_col], pdf[src_col]):
+            b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
+            n_bytes = len(b)
+            n_samples = 512 + (n_bytes * 7) % 1536
+            if n_bytes:
+                src = np.frombuffer(b, dtype=np.uint8).astype(np.int16)
+                wave = np.resize((src - 128) * 256, n_samples)  # zero-mean int16
+            else:
+                wave = np.zeros(n_samples, np.int16)  # empty source -> silence
+            ids.append(pid)
+            payloads.append(wave.astype("<i2").tobytes())
+            ns.append(n_samples)
+            durs.append(n_samples * 1000 // _PCM16_RATE)
+        yield pd.DataFrame(
+            {
+                "id": ids,
+                "payload": payloads,
+                "n_samples": ns,
+                "duration_ms": durs,
+            }
+        )
+
+
 def synthesize_raw_audio(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
     """Deterministic PCM16 audio payloads from any source column — the
     fixture stand-in for a real audio decoder's output (same role as
@@ -346,37 +401,41 @@ def synthesize_raw_audio(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
     samples (64..256 ms at 8 kHz) so every payload byte is genuine
     addressable signal; zero-mean shift keeps RMS meaningful. Arrow-batched
     mapInPandas; one narrow pass, no shuffle."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, payloads, ns, durs = [], [], [], []
-            for pid, s in zip(pdf[id_col], pdf[src_col]):
-                b = s.encode("utf-8") if isinstance(s, str) else bytes(s)
-                n_bytes = len(b)
-                n_samples = 512 + (n_bytes * 7) % 1536
-                if n_bytes:
-                    src = np.frombuffer(b, dtype=np.uint8).astype(np.int16)
-                    wave = np.resize((src - 128) * 256, n_samples)  # zero-mean int16
-                else:
-                    wave = np.zeros(n_samples, np.int16)  # empty source -> silence
-                ids.append(pid)
-                payloads.append(wave.astype("<i2").tobytes())
-                ns.append(n_samples)
-                durs.append(n_samples * 1000 // _PCM16_RATE)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "payload": payloads,
-                    "n_samples": ns,
-                    "duration_ms": durs,
-                }
-            )
-
     return df.mapInPandas(
-        _synth, "id long, payload binary, n_samples int, duration_ms long"
+        bind(_synth_audio, "_synth", src_col, id_col),
+        "id long, payload binary, n_samples int, duration_ms long",
     )
+
+
+def _audio_features(frame_len, payload_col, id_col, batches):
+    """The per-batch kernel of :func:`audio_features`."""
+    import numpy as np
+
+    for pdf in batches:
+        ids, nf, rms_arrs, zcr_arrs, rms_all = [], [], [], [], []
+        for pid, buf in zip(pdf[id_col], pdf[payload_col]):
+            wave = np.frombuffer(buf, dtype="<i2")
+            n_frames = len(wave) // frame_len
+            frames = wave[: n_frames * frame_len].reshape(n_frames, frame_len)
+            f64 = frames.astype(np.float64)
+            rms = np.sqrt((f64 * f64).mean(axis=1))
+            sign_flips = np.signbit(frames[:, 1:]) != np.signbit(frames[:, :-1])
+            zcr = sign_flips.mean(axis=1)
+            ids.append(pid)
+            nf.append(n_frames)
+            rms_arrs.append([float(x) for x in np.round(rms, 4)])
+            zcr_arrs.append([float(x) for x in np.round(zcr, 4)])
+            all64 = wave.astype(np.float64)
+            rms_all.append(float(np.round(np.sqrt((all64 * all64).mean()), 4)) if len(wave) else 0.0)
+        yield pd.DataFrame(
+            {
+                "id": ids,
+                "n_frames": nf,
+                "frame_rms": rms_arrs,
+                "frame_zcr": zcr_arrs,
+                "rms": rms_all,
+            }
+        )
 
 
 def audio_features(
@@ -397,36 +456,7 @@ def audio_features(
     if frame_len < 2:
         raise ValueError(f"frame_len must be >= 2, got {frame_len}")
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, nf, rms_arrs, zcr_arrs, rms_all = [], [], [], [], []
-            for pid, buf in zip(pdf[id_col], pdf[payload_col]):
-                wave = np.frombuffer(buf, dtype="<i2")
-                n_frames = len(wave) // frame_len
-                frames = wave[: n_frames * frame_len].reshape(n_frames, frame_len)
-                f64 = frames.astype(np.float64)
-                rms = np.sqrt((f64 * f64).mean(axis=1))
-                sign_flips = np.signbit(frames[:, 1:]) != np.signbit(frames[:, :-1])
-                zcr = sign_flips.mean(axis=1)
-                ids.append(pid)
-                nf.append(n_frames)
-                rms_arrs.append([float(x) for x in np.round(rms, 4)])
-                zcr_arrs.append([float(x) for x in np.round(zcr, 4)])
-                all64 = wave.astype(np.float64)
-                rms_all.append(float(np.round(np.sqrt((all64 * all64).mean()), 4)) if len(wave) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "n_frames": nf,
-                    "frame_rms": rms_arrs,
-                    "frame_zcr": zcr_arrs,
-                    "rms": rms_all,
-                }
-            )
-
     return df.mapInPandas(
-        _features,
+        bind(_audio_features, "_features", frame_len, payload_col, id_col),
         "id long, n_frames int, frame_rms array<double>, frame_zcr array<double>, rms double",
     )

@@ -12,6 +12,12 @@ materialized first (a caller's lazy ``persist()`` of the input), and
 releasing it would drop the caller's cache. A loop therefore leaves one
 checkpoint registered: the one its result reads.
 
+Cap rule: a fixpoint loop (one given ``until``) that spends its round cap
+without ``until`` holding raises ``ValueError`` naming the cap, after
+releasing its last round — a state short of the fixpoint is a wrong
+answer, not a partial one. A loop without ``until`` runs exactly its
+rounds.
+
 :func:`iterate` runs such a loop over a step function; :func:`checkpointed`
 holds a fixed input (an edge list read every round) for the loop's life.
 """
@@ -63,12 +69,16 @@ def iterate(
     over an eagerly checkpointed initial ``state``. Each new state is
     checkpointed eagerly, then the checkpoint at the root of the state it
     replaced is released (the module's release rule). When ``until`` is
-    given and returns true for a new state, the loop stops there. Returns
-    the last state, whose checkpoint stays registered."""
+    given and returns true for a new state, the loop stops there; when it
+    never does, the loop raises (the module's cap rule). Returns the last
+    state, whose checkpoint stays registered."""
     for i in range(1, rounds + 1):
         nxt = step(state, i).localCheckpoint(eager=True)
         _release(state)
         state = nxt
         if until is not None and until(state):
-            break
+            return state
+    if until is not None:
+        _release(state)
+        raise ValueError(f"no fixpoint within the round cap of {rounds} rounds")
     return state

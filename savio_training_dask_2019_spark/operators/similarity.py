@@ -48,6 +48,57 @@ def brute_knn(
     return scored.orderBy(F.col("cosine").desc(), F.col("id").asc()).limit(k)
 
 
+def _top_k_cosine(
+    queries: DataFrame,
+    corpus: DataFrame,
+    vec_col: str,
+    id_col: str,
+    k: int,
+    q_extra: tuple[Column, ...] = (),
+    c_extra: tuple[Column, ...] = (),
+    pair_filter: Column | None = None,
+    min_cosine: float | None = None,
+) -> DataFrame:
+    """Top-``k`` corpus rows per query by cosine rounded to 5 places, ties
+    to the smaller corpus id: (query_id, corpus_id, cosine, *c_extra).
+    ``q_extra``/``c_extra`` ride along each side, ``pair_filter`` applies
+    before scoring and ``min_cosine`` before ranking. The query side
+    broadcasts and the one shuffle is the per-query window. Norms are taken
+    once per side, before the cross join: per pair they would cost 2/3 of
+    the scoring flops, and ``dot / (cn * qn)`` is the same arithmetic bit
+    for bit."""
+    from pyspark.sql import Window
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        *q_extra,
+        as_double(F.col(vec_col)).alias("qvec"),
+    ).withColumn("qn", l2_norm(F.col("qvec")))
+    c = corpus.select(
+        F.col(id_col).alias("corpus_id"),
+        *c_extra,
+        as_double(F.col(vec_col)).alias("cvec"),
+    ).withColumn("cn", l2_norm(F.col("cvec")))
+    pairs = c.crossJoin(F.broadcast(q))
+    if pair_filter is not None:
+        pairs = pairs.filter(pair_filter)
+    scored = pairs.select(
+        "query_id",
+        "corpus_id",
+        F.round(
+            dot(F.col("cvec"), F.col("qvec")) / (F.col("cn") * F.col("qn")), 5
+        ).alias("cosine"),
+        *c.columns[1:-2],  # c_extra's names
+    )
+    if min_cosine is not None:
+        scored = scored.filter(F.col("cosine") >= min_cosine)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("corpus_id").asc()
+    )
+    ranked = scored.withColumn("rn", F.row_number().over(w))
+    return ranked.filter(F.col("rn") <= k).drop("rn")
+
+
 def brute_knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -57,36 +108,18 @@ def brute_knn_join(
     exclude_self: bool = False,
 ) -> DataFrame:
     """Exact k-NN for every query row: broadcast the (small) query side,
-    score corpus partitions locally, keep top-k per query via window.
-    One shuffle (the per-query top-k), no corpus replication.
+    score corpus partitions locally, keep top-k per query via window
+    (:func:`_top_k_cosine`). One shuffle (the per-query top-k), no corpus
+    replication.
 
     ``exclude_self=True`` drops corpus rows whose id equals the query id —
     only meaningful when the queries are drawn from the corpus (same id
     space). Default False: with independent id spaces an id collision is
     coincidental and the neighbor must be kept."""
-    from pyspark.sql import Window
-
-    # norms once per side before the cross join: each corpus row meets |Q|
-    # queries (and vice versa), so recomputing norms per pair wastes 2/3 of
-    # the scoring flops; dot/(nc*nq) is the same arithmetic bit-for-bit
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qvec")
-    ).withColumn("qn", l2_norm(F.col("qvec")))
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), as_double(F.col(vec_col)).alias("cvec")
-    ).withColumn("cn", l2_norm(F.col("cvec")))
-    pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("corpus_id"))
-    scored = pairs.select(
-        "query_id",
-        "corpus_id",
-        F.round(
-            dot(F.col("cvec"), F.col("qvec")) / (F.col("cn") * F.col("qn")), 5
-        ).alias("cosine"),
+    not_self = F.col("query_id") != F.col("corpus_id")
+    return _top_k_cosine(
+        queries, corpus, vec_col, id_col, k, pair_filter=not_self if exclude_self else None
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id").asc())
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 def hard_negative_mining(
@@ -110,42 +143,24 @@ def hard_negative_mining(
     negatives above a confusability threshold (common when the pool is
     huge and distant negatives are free from in-batch sampling anyway).
 
-    Scale: the anchor BATCH broadcasts (norms precomputed per side, same
-    flop argument as :func:`brute_knn_join`); the corpus is scanned once,
-    never replicated, and the only shuffle is the per-anchor top-k window
-    on ``query_id`` — uniform 8-byte keys, k rows of state per anchor.
-    Mining negatives for EVERY training example is batched exactly like
-    this (anchor batches of ~10⁴ against the full pool), or routed through
-    the IVF/rp index tiers when the pool itself is the bottleneck."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        as_double(F.col(vec_col)).alias("qvec"),
-    ).withColumn("qn", l2_norm(F.col("qvec")))
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(label_col).alias("neg_label"),
-        as_double(F.col(vec_col)).alias("cvec"),
-    ).withColumn("cn", l2_norm(F.col("cvec")))
-    pairs = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neg_label") != F.col("q_label")  # negatives only
+    Scale: :func:`brute_knn_join`'s plan (:func:`_top_k_cosine`) — the
+    anchor BATCH broadcasts; the corpus is scanned once, never replicated,
+    and the only shuffle is the per-anchor top-k window on ``query_id`` —
+    uniform 8-byte keys, k rows of state per anchor. Mining negatives for
+    EVERY training example is batched exactly like this (anchor batches of
+    ~10⁴ against the full pool), or routed through the IVF/rp index tiers
+    when the pool itself is the bottleneck."""
+    return _top_k_cosine(
+        queries,
+        corpus,
+        vec_col,
+        id_col,
+        k,
+        q_extra=(F.col(label_col).alias("q_label"),),
+        c_extra=(F.col(label_col).alias("neg_label"),),
+        pair_filter=F.col("neg_label") != F.col("q_label"),  # negatives only
+        min_cosine=min_cosine,
     )
-    scored = pairs.select(
-        "query_id",
-        "corpus_id",
-        F.round(
-            dot(F.col("cvec"), F.col("qvec")) / (F.col("cn") * F.col("qn")), 5
-        ).alias("cosine"),
-        "neg_label",
-    )
-    if min_cosine is not None:
-        scored = scored.filter(F.col("cosine") >= min_cosine)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc()
-    )
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 class IVFIndex:
@@ -997,12 +1012,7 @@ def scalar_quantize_int8(
 
 
 def max_cosine_vs_set(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    ref: DataFrame,
-    ref_vec_col: str | None = None,
-    method: str = "fold",
+    df: DataFrame, vec_col: str, id_col: str, ref: DataFrame
 ) -> DataFrame:
     """Per-row maximum cosine against EVERY vector of ``ref`` — the
     semantic-membership primitive behind embedding-based decontamination
@@ -1011,103 +1021,31 @@ def max_cosine_vs_set(
     double, raw — caller rounds/thresholds).
 
     Plan shape (the eval-side-is-small contract, same as the n-gram
-    decontam tiers): ``ref`` folds into ONE broadcast array row of
-    (vector, clamped norm) structs — bounded O(|ref|·dim), the eval suite,
-    never the corpus — and each corpus row pays one narrow
-    O(|ref|·dim) fold. No shuffle, no join on the corpus side, no Python
-    boundary. When |ref| outgrows a broadcast, the same question becomes
-    :func:`cell_knn_join` with the eval side as probes — this operator is
-    deliberately the broadcast tier only.
+    decontam tiers): ``ref`` is collected once, when the query is built,
+    as a :func:`_centroid_model` — bounded O(|ref|·dim), the eval suite,
+    never the corpus — and each corpus row is scored against all of it by
+    :func:`_score_cells`, the narrow Arrow kernel :func:`assign_cells`
+    runs. No shuffle, no join on the corpus side. When |ref| outgrows the
+    driver, the same question becomes :func:`cell_knn_join` with the eval
+    side as probes.
 
-    ``method``: ``"fold"`` (default) is the pure-Catalyst tier above — the
-    oracle-exact sequential fold the catalog query pins. ``"arrow"`` is
-    the throughput tier: the ref matrix is collected driver-side — one
-    bounded O(|ref|·dim) collect, the eval-side-is-small contract, same
-    class as the PQ codebook collects — L2-normalized once in numpy, and
-    each Arrow batch scores by ONE BLAS matmul (batch×dim @ dim×|ref|)
-    instead of |ref| interpreted HOF folds per row (~10x at the fixture
-    bench). Differs from fold only by float summation order (<1e-12;
-    equal after the caller's 5-decimal round — differentially pinned)."""
-    if method not in ("fold", "arrow"):
-        raise ValueError(f"method must be fold|arrow, got {method!r}")
-    rvec = ref_vec_col or vec_col
-    rv = F.transform(F.col(rvec), lambda x: x.cast("double"))
-    ref_arr = ref.select(
-        F.struct(
-            rv.alias("v"),
-            F.greatest(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(rv, rv, lambda a, b: a * b),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ),
-                F.lit(_NORM_FLOOR),
-            ).alias("n"),
-        ).alias("e")
-    ).agg(F.collect_list("e").alias("__refs"))
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    n = F.greatest(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(v, v, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        F.lit(_NORM_FLOOR),
+    Bits are the Spark fold's (exact-order rule of ``functions/vectors``):
+    ``dot(v, r) / (n * rn)`` with both norms clamped to ``_NORM_FLOOR``,
+    so a zero vector scores 0.0, not NULL. A pair with a NULL vector, a
+    NULL component or unequal lengths has no score; a row with no scored
+    pair, or an empty ``ref``, gets NULL."""
+    # every ref row shares one cid: the max does not depend on their order
+    model = _centroid_model(
+        ref.select(F.lit(0).alias("cid"), as_double(F.col(vec_col)).alias("ce"))
     )
-    mc = F.array_max(
-        F.transform(
-            F.col("__refs"),
-            lambda e: F.aggregate(
-                F.zip_with(v, e["v"], lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / (n * e["n"]),
-        )
+    scored = _score_cells(
+        df.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")),
+        "v",
+        model,
     )
-    if method == "fold":
-        return (
-            df.crossJoin(F.broadcast(ref_arr))
-            .select(id_col, mc.alias("max_cos"))
-        )
-
-    import numpy as np
-
-    refs = ref.select(rv.alias("v")).collect()  # bounded O(|ref|·dim):
-    # the eval suite by contract — never the corpus (see docstring)
-    rmat = np.asarray([r["v"] for r in refs], dtype="float64")
-    rnorm = np.maximum(np.linalg.norm(rmat, axis=1), _NORM_FLOOR)
-    rmat_t = (rmat / rnorm[:, None]).T  # dim × |ref|, unit columns
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({id_col: [], "max_cos": []})
-                continue
-            vm = np.asarray(list(pdf["__v"]), dtype="float64")
-            nn = np.maximum(np.linalg.norm(vm, axis=1), _NORM_FLOOR)
-            sims = (vm / nn[:, None]) @ rmat_t
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "max_cos": sims.max(axis=1)}
-            )
-
-    vin = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # derive the id field's type from the input so string/int id columns
-    # survive the Arrow boundary exactly like the 'fold' tier (ADVICE r10
-    # — a hardcoded `long` failed or miscast non-bigint ids)
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [df.schema[id_col], StructField("max_cos", DoubleType())]
+    return scored.select(
+        F.col("id").alias(id_col), F.array_max("sims").alias("max_cos")
     )
-    return df.select(id_col, vin.alias("__v")).mapInPandas(score, out_schema)
 
 
 def mmr_select(

@@ -470,6 +470,29 @@ def grouped_count_min_table(
     )
 
 
+def _probe_buckets(width: int, depth: int):
+    """The Arrow-batched pandas_udf giving a string probe its ``depth``
+    Count-Min buckets: the build side's keyed siphash (:func:`_cms_buckets`)
+    over a ``width``-wide table. NULL probes get NULL buckets (→ NULL
+    est_count): the build side drops NULLs, so stringifying a NULL to the
+    literal 'None' would return an arbitrary bucket's overcount instead
+    (ADVICE r10)."""
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def buckets(items: pd.Series) -> pd.Series:
+        out = pd.Series([None] * len(items), dtype=object, index=items.index)
+        nn = items.dropna().astype(str)
+        if len(nn):
+            cols = [_cms_buckets(nn.values, d, width) for d in range(depth)]
+            out.loc[nn.index] = pd.Series(
+                [list(bs) for bs in zip(*cols)], index=nn.index
+            )
+        return out
+
+    return buckets
+
+
 def grouped_cms_estimates(
     table: DataFrame,
     probes: DataFrame,
@@ -492,19 +515,6 @@ def grouped_cms_estimates(
     g (AQE broadcasts it while the folded side stays small); probe buckets
     come from the same Arrow-batched keyed-siphash UDF as the build, and
     the min-of-counters is JVM-side zip_with + array_min."""
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(items: pd.Series) -> pd.Series:
-        out = pd.Series([None] * len(items), dtype=object, index=items.index)
-        nn = items.dropna().astype(str)
-        if len(nn):
-            cols = [_cms_buckets(nn.values, d, width) for d in range(depth)]
-            out.loc[nn.index] = pd.Series(
-                [list(bs) for bs in zip(*cols)], index=nn.index
-            )
-        return out
-
     folded = table.groupBy(F.col("g").alias("__g")).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "counts"))),
@@ -512,7 +522,9 @@ def grouped_cms_estimates(
         ).alias("__cms")
     )
     return (
-        probes.withColumn("__bk", buckets(F.col(item_col).cast("string")))
+        probes.withColumn(
+            "__bk", _probe_buckets(width, depth)(F.col(item_col).cast("string"))
+        )
         .join(
             folded,
             F.col(group_col).cast("string") == F.col("__g"),
@@ -553,22 +565,6 @@ def cms_estimates(
     by broadcast crossJoin (the 1-row model-attach pattern); probe buckets
     come from one Arrow-batched pandas_udf sharing the build-side hash, and
     the min-of-counters is JVM-side ``zip_with`` + ``array_min``."""
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(items: pd.Series) -> pd.Series:
-        # NULL probes get NULL buckets (→ NULL est_count): the build side
-        # drops NULLs, so stringifying a NULL to the literal 'None' would
-        # return an arbitrary bucket's overcount instead (ADVICE r10)
-        out = pd.Series([None] * len(items), dtype=object, index=items.index)
-        nn = items.dropna().astype(str)
-        if len(nn):
-            cols = [_cms_buckets(nn.values, d, width) for d in range(depth)]
-            out.loc[nn.index] = pd.Series(
-                [list(bs) for bs in zip(*cols)], index=nn.index
-            )
-        return out
-
     folded = table.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "counts"))),
@@ -576,7 +572,9 @@ def cms_estimates(
         ).alias("__cms")
     )
     return (
-        probes.withColumn("__bk", buckets(F.col(item_col).cast("string")))
+        probes.withColumn(
+            "__bk", _probe_buckets(width, depth)(F.col(item_col).cast("string"))
+        )
         .crossJoin(F.broadcast(folded))
         .withColumn(
             "est_count",

@@ -1123,16 +1123,15 @@ def q_decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — catches reworded eval leakage that n-gram overlap misses
     (the phi/llama-class report step).
 
-    Scale: the eval suite folds into ONE broadcast array row (the
-    eval-side-is-small contract all decontam tiers share); each corpus row
-    pays a narrow O(|eval|·dim) fold — no corpus shuffle, no join, no
-    Python boundary. When the eval side outgrows a broadcast the same
-    question becomes the cell join (`knn_cells` shape). The flag
-    thresholds the ROUNDED cosine, so the cut is engine-independent
-    (emb_near_dup precedent). This catalog entry runs the pure-Catalyst
-    fold tier (oracle-exact); ``method="arrow"`` is the throughput tier
-    (one BLAS matmul per Arrow batch, ~3x here, more at real dims —
-    differentially pinned equal at 5 decimals)."""
+    Scale: the eval suite is collected once, when the query is built, as
+    a bounded model (the eval-side-is-small contract all decontam tiers
+    share); each corpus row is scored against it by one narrow Arrow
+    kernel, the one ``knn_cells`` runs — no corpus shuffle, no join. Its
+    bits are the Spark fold's (the exact-order rule), so the oracle match
+    is exact. When the eval side outgrows the driver the same question
+    becomes the cell join (`knn_cells` shape). The flag thresholds the
+    ROUNDED cosine, so the cut is engine-independent (emb_near_dup
+    precedent)."""
     from ..operators.similarity import max_cosine_vs_set
 
     emb = load_table(spark, sf_dir, "embeddings")

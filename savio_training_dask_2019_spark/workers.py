@@ -30,12 +30,21 @@ skip the re-read. It acts only on a worker (``SparkFiles._is_running_on_worker``
 is set by the task setup that precedes kernel unpickling), never on the
 driver, and not at all on a Python whose ``zipimporter`` has no
 ``invalidate_caches``.
+
+Unpickling a kernel imports the package only when the kernel reaches it:
+cloudpickle ships a module-level function by reference (its module and
+name, imported on load), but a closure by value, and such a closure
+installs the pin only if its body imports a package module or it reads a
+package function. A kernel that needs neither is a module-level function
+whose parameters :func:`bind` attaches.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import zipimport
+from typing import Callable
 
 from pyspark.core.files import SparkFiles
 
@@ -61,3 +70,13 @@ def _pin_launch_archives() -> None:
 
 
 _pin_launch_archives()
+
+
+def bind(fn: Callable, name: str, /, *args) -> functools.partial:
+    """``functools.partial(fn, *args)``: the module-level kernel ``fn``
+    with its leading parameters bound, ready for ``mapInArrow`` or
+    ``mapInPandas``. Spark prints a kernel's ``__name__`` in plans and a
+    partial has none, so it is set to ``name``."""
+    bound = functools.partial(fn, *args)
+    bound.__name__ = name
+    return bound

@@ -14,8 +14,10 @@ returned frame's plan starts at the last checkpoint and would hide them.
 Normalization strips what differs between two runs of one tree: expression
 ids (``#123``), ``plan_id=`` tags, RDD ids, whole-stage-codegen ids, and the
 query-stage numbers of cached frames' executed adaptive plans (they follow
-the order in which stages happened to finish). Scale factor:
-``SPARK_GRAFT_SF_DIR`` (default sf0.01).
+the order in which stages happened to finish). It also strips the numbers of
+lambda variables (``lambda x_618#``): they count every lambda the session
+built, so a change to one query's lambdas would renumber every later query.
+Scale factor: ``SPARK_GRAFT_SF_DIR`` (default sf0.01).
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from savio_training_dask_2019_spark.queries import vectorops  # noqa: E402
 from savio_training_dask_2019_spark.session import get_spark  # noqa: E402
 
 _NOISE = (
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id]"),

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from savio_training_dask_2019_spark.operators import (
     connected_components,
     connected_components_star,
@@ -56,23 +58,37 @@ def test_star_handles_multiple_components_and_duplicates(spark):
     assert star[12] == 12
 
 
+def test_propagation_past_its_round_cap_raises(spark):
+    """A 60-node chain needs 59 propagation rounds; the default
+    ``max_iter=20`` stops short of the fixpoint, where the labels are still
+    wrong, so the call raises and names the cap instead of returning
+    them."""
+    chain = [(i, i + 1) for i in range(59)]
+    with pytest.raises(ValueError, match="round cap of 20"):
+        connected_components(_edges_df(spark, chain))
+
+
 def test_iterative_rounds_release_checkpoint_blocks(spark):
     """Dataset.unpersist() is a no-op on localCheckpoint-ed frames, so the
     loops free superseded rounds through the RDD registry — after a
     multi-round run, at most the FINAL round's checkpoint (plus nothing
-    per intermediate round) may remain registered."""
+    per intermediate round) may remain registered; a run that raises at
+    its round cap leaves nothing registered."""
     sc = spark.sparkContext
     chain = [(i, i + 1) for i in range(300)]  # forces many star rounds
 
-    for fn, kwargs in (
-        (connected_components_star, {}),
-        (connected_components, {"max_iter": 8}),
-    ):
-        before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        out = fn(_edges_df(spark, chain), **kwargs)
-        out.count()  # materialize through the final checkpoint
-        after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        leaked = after - before
-        # the final round's checkpoint legitimately backs the returned
-        # frame; anything beyond that is a leaked intermediate round
-        assert len(leaked) <= 1, (fn.__name__, sorted(leaked))
+    def registered():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = registered()
+    out = connected_components_star(_edges_df(spark, chain))
+    out.count()  # materialize through the final checkpoint
+    leaked = registered() - before
+    # the final round's checkpoint legitimately backs the returned
+    # frame; anything beyond that is a leaked intermediate round
+    assert len(leaked) <= 1, sorted(leaked)
+
+    before = registered()
+    with pytest.raises(ValueError, match="round cap of 8"):
+        connected_components(_edges_df(spark, chain), max_iter=8)
+    assert registered() - before == set()

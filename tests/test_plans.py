@@ -445,7 +445,6 @@ _MAX_BNLJ = {
     "cms_counts": 1,        # 1-row folded CMS table attach
     "cross_join": 1,        # the intentional 5×25-row cross-join demo
     "decontam_bloom": 1,    # 1-row Bloom bitset-map attach
-    "decontam_semantic": 1, # 1-row folded eval-vector array attach
     "dedup_incremental_bloom": 2,  # ONE bitset attach, printed under both
                             # union branches (physically reused broadcast)
     "doc_tfidf": 1,         # 1-row corpus doc count
@@ -494,7 +493,6 @@ _MAX_SINGLE_PARTITION = {
     "bigram_logprob": 1, "bm25_search": 1, "ccnet_bands": 2,
     "cms_counts": 2,  # 1-row table fold + the 20-probe global limit
     "collocations": 1, "corr_cov": 1, "decontam_bloom": 1,
-    "decontam_semantic": 1,  # the eval-array fold
     "dedup_incremental_bloom": 2,  # one bitset fold printed under both branches
     "dedup_stats": 1,
     "describe_summary": 1, "distinct_approx": 1, "doc_tfidf": 1,

@@ -476,10 +476,44 @@ def test_max_cosine_vs_set_planted_and_decontam_semantic(spark, sf_dir):
     assert all(r["max_eval_cos"] is not None for r in rows)
 
 
-def test_max_cosine_arrow_tier_matches_fold(spark, sf_dir):
-    """The BLAS throughput tier equals the oracle-exact fold tier after the
-    caller's 5-decimal round on the real corpus, and rejects bad methods."""
-    import pytest
+def _max_cosine_fold(df, vec_col, id_col, ref):
+    """The Spark fold max_cosine_vs_set must match bit for bit: ``ref``
+    folded into one array row of (vector, clamped norm), attached by a
+    broadcast crossJoin, and the per-row max of ``dot / (n * rn)``."""
+    from pyspark.sql import functions as F
+
+    from savio_training_dask_2019_spark.functions.vectors import (
+        as_double,
+        dot,
+        l2_norm,
+    )
+    from savio_training_dask_2019_spark.operators.similarity import _NORM_FLOOR
+
+    def clamped(v):
+        return F.greatest(l2_norm(v), F.lit(_NORM_FLOOR))
+
+    rv = as_double(F.col(vec_col))
+    refs = ref.select(F.struct(rv.alias("v"), clamped(rv).alias("n")).alias("e")).agg(
+        F.collect_list("e").alias("__refs")
+    )
+    v = as_double(F.col(vec_col))
+    return df.crossJoin(F.broadcast(refs)).select(
+        id_col,
+        F.array_max(
+            F.transform("__refs", lambda e: dot(v, e["v"]) / (clamped(v) * e["n"]))
+        ).alias("max_cos"),
+    )
+
+
+def test_max_cosine_vs_set_bits_equal_spark_fold(spark, sf_dir):
+    """max_cosine_vs_set scores through the exact-order Arrow kernel, so
+    every max_cos equals the Spark fold's double exactly (``==``, not a
+    tolerance) — on the sf0.01 train/eval split and on the rows where the
+    fold's NULL rules decide: a NULL vector, a NULL component and an
+    unequal length on either side, a zero vector, and an empty reference
+    set. String and int ids keep their types."""
+    import os
+
     from pyspark.sql import functions as F
 
     from savio_training_dask_2019_spark.operators.similarity import (
@@ -487,58 +521,63 @@ def test_max_cosine_arrow_tier_matches_fold(spark, sf_dir):
     )
     from savio_training_dask_2019_spark.sources import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    def both(tr, ev, id_col="vec_id"):
+        got = max_cosine_vs_set(tr, "embedding", id_col, ev)
+        want = _max_cosine_fold(tr, "embedding", id_col, ev)
+        assert got.dtypes == want.dtypes
+        return dict(got.collect()), dict(want.collect())
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    emb = load_table(spark, sf01, "embeddings")
     is_eval = F.col("vec_id") % 23 == 0
-    tr, ev = emb.where(~is_eval), emb.where(is_eval)
-    fold = {
-        r["vec_id"]: round(r["max_cos"], 5)
-        for r in max_cosine_vs_set(tr, "embedding", "vec_id", ev).collect()
-    }
-    arrow = {
-        r["vec_id"]: round(r["max_cos"], 5)
-        for r in max_cosine_vs_set(
-            tr, "embedding", "vec_id", ev, method="arrow"
-        ).collect()
-    }
-    assert fold == arrow and len(fold) > 0
-    with pytest.raises(ValueError, match="method"):
-        max_cosine_vs_set(tr, "embedding", "vec_id", ev, method="gpu")
+    got, want = both(emb.where(~is_eval), emb.where(is_eval))
+    assert got == want and len(got) > 0
+    assert all(x is not None for x in got.values())
 
-
-def test_max_cosine_arrow_tier_nonbigint_id_columns(spark, sf_dir):
-    """ADVICE r10: the arrow tier used to hardcode its mapInPandas output
-    schema as ``id long``, so a string (or int) id column failed or
-    miscast at the Arrow boundary while the fold tier handled any id type.
-    The schema is now derived from the input — both tiers must agree on a
-    STRING id and on an INT id."""
-    from pyspark.sql import functions as F
-
-    from savio_training_dask_2019_spark.operators.similarity import (
-        max_cosine_vs_set,
+    schema = "vec_id long, embedding array<float>"
+    ev = spark.createDataFrame(
+        [
+            (100, [1.0, 0.0, 0.0]),
+            (101, [0.5, 2.0, -1.0]),
+            (102, None),  # NULL vector: scores no pair
+            (103, [1.0, None, 0.0]),  # NULL component: scores no pair
+            (104, [1.0, 1.0]),  # pairs only with length-2 rows
+            (105, [0.0, 0.0, 0.0]),  # zero vector: clamped norm, cosine 0
+        ],
+        schema,
     )
-    from savio_training_dask_2019_spark.sources import load_table
+    tr = spark.createDataFrame(
+        [
+            (1, [2.0, 0.0, 0.0]),
+            (2, [0.0, 3.0, 5.0]),
+            (3, [0.0, 0.0, 0.0]),
+            (4, None),
+            (5, [None, 1.0, 0.0]),
+            (6, [3.0, -4.0]),
+            (7, [1.0, 2.0, 3.0, 4.0]),  # no ref row of length 4
+        ],
+        schema,
+    )
+    got, want = both(tr, ev)
+    assert got == want
+    assert got[3] == 0.0
+    assert abs(got[6] + 0.2 * 0.5**0.5) < 1e-12  # only ref 104 pairs
+    assert got[4] is None and got[5] is None and got[7] is None
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    is_eval = F.col("vec_id") % 23 == 0
+    got, want = both(tr, ev.limit(0))
+    assert got == want and set(got.values()) == {None}
+
+    base = emb.where(F.col("vec_id") < 300)
     for id_expr, id_type in (
         (F.concat(F.lit("doc-"), F.col("vec_id")), "string"),
         (F.col("vec_id").cast("int"), "int"),
     ):
-        base = emb.select(id_expr.alias("doc_id"), "embedding", "vec_id")
-        tr = base.where(~is_eval).drop("vec_id")
-        ev = base.where(is_eval).drop("vec_id")
-        fold = {
-            r["doc_id"]: round(r["max_cos"], 5)
-            for r in max_cosine_vs_set(tr, "embedding", "doc_id", ev).collect()
-        }
-        arrow_df = max_cosine_vs_set(
-            tr, "embedding", "doc_id", ev, method="arrow"
-        )
-        assert dict(arrow_df.dtypes)["doc_id"] == id_type
-        arrow = {
-            r["doc_id"]: round(r["max_cos"], 5) for r in arrow_df.collect()
-        }
-        assert fold == arrow and len(fold) > 0
+        keyed = base.select(id_expr.alias("doc_id"), "embedding", is_eval.alias("e"))
+        tr, ev = keyed.where(~F.col("e")).drop("e"), keyed.where("e").drop("e")
+        got_df = max_cosine_vs_set(tr, "embedding", "doc_id", ev)
+        assert dict(got_df.dtypes)["doc_id"] == id_type
+        got, want = both(tr, ev, "doc_id")
+        assert got == want and len(got) > 0
 
 
 def test_mmr_select_lambda_one_is_relevance_order(spark):

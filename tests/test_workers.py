@@ -173,3 +173,58 @@ def test_pin_skips_exactly_the_launch_archives(tmp_path, monkeypatch):
     assert imps[launch]._files is held[launch]
     assert imps[shipped]._files is not held[shipped]
     assert "new.py" in imps[shipped]._files
+
+
+_LOAD_SCRIPT = r"""
+import pickle, sys
+
+with open(sys.argv[1], "rb") as f:
+    pickle.load(f)
+print("savio_training_dask_2019_spark.workers" in sys.modules)
+"""
+
+
+def test_kmeans_and_multimodal_kernels_install_the_pin(spark, tmp_path, monkeypatch):
+    """Unpickling each k-means and multimodal kernel in a fresh interpreter
+    imports the package, and with it ``workers``: the kernels are
+    module-level functions, pickled by reference, so a worker that runs
+    only them still installs the pin. A closure kernel would be pickled
+    by value and import nothing of the package."""
+    from pyspark import cloudpickle
+
+    from savio_training_dask_2019_spark.operators import kmeans, multimodal
+
+    frame = type(spark.range(1))
+    kernels = {}
+    for method in ("mapInArrow", "mapInPandas"):
+        original = getattr(frame, method)
+
+        def recording(self, fn, *args, _original=original, **kwargs):
+            kernels[fn.__name__ + str(len(kernels))] = fn
+            return _original(self, fn, *args, **kwargs)
+
+        monkeypatch.setattr(frame, method, recording)
+
+    vecs = spark.createDataFrame([(1, [0.1, 0.2])], "id long, v array<float>")
+    kmeans.kmeans_lloyd_exact(vecs, "v", "id", k=1, iters=1)
+    one = spark.range(1)
+    multimodal.decode_meta(one)
+    multimodal.synthesize_raw_images(one, "id", "id")
+    multimodal.resize_images(one)
+    multimodal.synthesize_raw_video(one, "id", "id")
+    multimodal.sample_frames(one)
+    multimodal.image_features(one)
+    multimodal.synthesize_raw_audio(one, "id", "id")
+    multimodal.audio_features(one)
+    assert len(kernels) == 9, sorted(kernels)
+
+    env = dict(os.environ, PYTHONPATH=REPO)
+    for name, fn in kernels.items():
+        path = tmp_path / f"{name}.pkl"
+        path.write_bytes(cloudpickle.dumps(fn))
+        r = subprocess.run(
+            [sys.executable, "-c", _LOAD_SCRIPT, str(path)],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert r.stdout.strip() == "True", name
