@@ -17,7 +17,6 @@ from .dedup import (
     keep_best_by_hash,
     keep_first_by_hash,
     minhash_banded_pairs,
-    minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     semantic_dedup,
     shingle_array,
@@ -95,7 +94,6 @@ __all__ = [
     "ngram_jaccard_pairs",
     "connected_components",
     "minhash_banded_pairs",
-    "minhash_near_dup_pairs",
     "shingle_array",
     "embedding_near_dup_pairs",
     "semantic_dedup",

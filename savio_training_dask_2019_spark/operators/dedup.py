@@ -1,13 +1,13 @@
 """Deduplication family (LLM-pipeline extension, SURVEY.md §2.12).
 
-Four tiers, cheapest first — a 100 TB corpus dedup pipeline composes them in
+Five tiers, cheapest first — a 100 TB corpus dedup pipeline composes them in
 this order so each tier shrinks the candidate set for the next:
 
 1. exact        — hash-groupBy on a content hash (one shuffle on the hash)
 2. fingerprint  — md5 of the sorted token set (order-insensitive exact)
 3. n-gram Jaccard — exact set similarity via shingle inverted index
                     (self-join on shingle; only docs sharing a shingle pair up)
-4. MinHash LSH  — sub-quadratic approximate Jaccard via pyspark.ml
+4. MinHash LSH  — sub-quadratic approximate Jaccard, banded in column math
 5. SimHash      — 64-bit near-dup signature; Hamming-band self-join
 
 Reference surface being generalized: ``drop_duplicates()`` (dask §2.2); tiers
@@ -373,45 +373,6 @@ def _ngram_jaccard(
     return scored, index
 
 
-def minhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hash_tables: int = 5,
-    max_jaccard_distance: float = 0.7,
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate near-dup pairs via MinHash LSH (shingle → minhash → band →
-    bucket join). Sub-quadratic: candidate pairs only form inside LSH buckets.
-    Returns (id_a, id_b, jaccard_dist estimate).
-
-    Deterministic for a fixed seed. 100 TB notes: ``numHashTables`` trades
-    recall for shuffle volume; shingle vectors are sparse (HashingTF binary),
-    so the signature computation is a narrow map."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram
-
-    toks = df.select(F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("toks"))
-    ngrams = NGram(n=n, inputCol="toks", outputCol="shingles").transform(toks)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    ).transform(ngrams)
-    tf = tf.filter(F.size("shingles") > 0)
-
-    lsh = MinHashLSH(inputCol="features", outputCol="sig", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(tf)
-    pairs = model.approxSimilarityJoin(tf, tf, max_jaccard_distance, distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.round("jaccard_dist", 4).alias("jaccard_dist"),
-        )
-    )
-
-
 def minhash_banded_pairs(
     df: DataFrame,
     text_col: str,
@@ -422,9 +383,8 @@ def minhash_banded_pairs(
     max_jaccard_distance: float = 0.7,
 ) -> DataFrame:
     """Hand-rolled MinHash banding — the literal shingle → minhash → band →
-    bucket-join pipeline, entirely in codegen'd column math (the pyspark.ml
-    `MinHashLSH` variant, `minhash_near_dup_pairs`, remains for parity; this
-    one skips HashingTF feature vectors, the ml fit, and VectorUDT boxing).
+    bucket-join pipeline, entirely in codegen'd column math (no HashingTF
+    feature vectors, no pyspark.ml fit, no VectorUDT boxing).
 
     Per doc: ``num_hashes`` minhash values in ONE pass over the distinct
     shingles (array accumulator + zip_with least; hash_i(s) = xxhash64(i,s));
@@ -549,24 +509,18 @@ def embedding_near_dup_pairs(
 
     ``method='brute'``: exact all-pairs scoring — O(n²) compute, only viable
     for corpora that fit a cross join; it is the oracle-checkable tier.
-    ``method='lsh'``: pyspark.ml BucketedRandomProjectionLSH with the exact
-    threshold mapping  cos(a,b) >= c  ⟺  ||â-b̂|| <= sqrt(2-2c); candidates
-    only form inside hash buckets (sub-quadratic shuffle), distances exact,
-    recall approximate.
     ``method='rp'``: random-projection bucket LSH hand-rolled as pure
     DataFrame expressions — project each unit vector onto fixed unit
     hyperplanes (driver-side numpy, seeded), bucket = floor(proj/
     bucket_length); a table's key is the tuple of ``projs_per_table``
     buckets (AND-amplification — mllib's BRP-LSH has only the OR dimension),
     tables are OR'd; candidates share a (table, key), exact cosine on
-    candidates. Same cost model as 'lsh' (one candidate-join shuffle,
-    sub-quadratic) but stays in column math end-to-end — no VectorUDT
-    boxing, no ml fit job — and the AND knob is what makes pruning real at
-    near-dup thresholds.
+    candidates. One candidate-join shuffle, sub-quadratic, in column math
+    end-to-end; the AND knob is what makes pruning real at near-dup
+    thresholds.
 
-    Parameter scope: ``bucket_length``/``num_hash_tables``/``seed`` apply to
-    'lsh' and 'rp'; ``projs_per_table``/``dim`` apply to 'rp' only; 'brute'
-    uses none of them.
+    Parameter scope: ``bucket_length``/``num_hash_tables``/``seed``/
+    ``projs_per_table``/``dim`` apply to 'rp'; 'brute' uses none of them.
 
     Physics note (pinned by tests): LSH pruning exists only when matching
     pairs are much closer than random pairs. For ~uniform random vectors,
@@ -595,31 +549,6 @@ def embedding_near_dup_pairs(
                 ).alias("cosine"),
             )
             .filter(F.col("cosine") >= min_cosine)
-        )
-    if method == "lsh":
-        import math
-
-        from pyspark.ml.feature import BucketedRandomProjectionLSH
-        from pyspark.ml.functions import array_to_vector
-
-        unit = df.select(
-            F.col(id_col).alias("id"),
-            array_to_vector(l2_normalize(as_double(F.col(vec_col)))).alias("features"),
-        )
-        lsh = BucketedRandomProjectionLSH(
-            inputCol="features", outputCol="hashes",
-            bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
-        )
-        model = lsh.fit(unit)
-        max_dist = math.sqrt(max(2.0 - 2.0 * min_cosine, 0.0))
-        pairs = model.approxSimilarityJoin(unit, unit, max_dist, distCol="l2_dist")
-        return (
-            pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-            .select(
-                F.col("datasetA.id").alias("id_a"),
-                F.col("datasetB.id").alias("id_b"),
-                F.round(1 - F.col("l2_dist") * F.col("l2_dist") / 2, 5).alias("cosine"),
-            )
         )
     if method == "rp":
         import numpy as np
@@ -699,7 +628,7 @@ def embedding_near_dup_pairs(
             .filter(F.col("cosine") >= min_cosine)
             .select("id_a", "id_b", "cosine")
         )
-    raise ValueError(f"unknown method {method!r}; use 'brute', 'lsh', or 'rp'")
+    raise ValueError(f"unknown method {method!r}; use 'brute' or 'rp'")
 
 
 # Byte budget of one (block rows × cluster rows) float64 tile in the

@@ -1,24 +1,43 @@
-"""Misra-Gries heavy hitters — the frequency member of the mergeable-sketch
-family (HLL for cardinality, KLL for quantiles, MG for top items).
+"""Mergeable frequency sketches — Misra-Gries (which items are heavy) and
+Count-Min (how often is THIS item), beside HLL (how many distinct) and KLL
+(what quantile) in the sketch family.
 
-Why this shape at 100 TB: exact top-k over a token stream needs a full
-(item → count) shuffle — vocabulary-sized state through one aggregation.
-A Misra-Gries(k) summary is O(k) per partition, merges associatively
-(Agarwal et al. 2012, "Mergeable Summaries", PODS '12: combine counts,
-subtract the (k+1)-th largest, keep positives), and carries a deterministic
-error contract: for every surviving item,
+Why this shape at 100 TB: exact per-item counts need a full (item → count)
+shuffle — vocabulary-sized state through one aggregation. A mergeable
+summary (Agarwal et al. 2012, "Mergeable Summaries", PODS '12) is the Dask
+training's chunk/aggregate reduction instead: one narrow Arrow-batched pass
+reduces each partition to a summary of bounded size, only the summaries
+move, and a tiny merge combines them. The item stream never shuffles.
 
-    est <= true <= est + err_bound
+One implementation per sketch, over a tuple of group columns: the
+ungrouped operators pass ``()``, the grouped ones ``(group_col,)``, and a
+group's sketch is exactly the ungrouped sketch of that group's rows
+(per-partition state is O(groups-in-partition · summary) — for
+high-cardinality group columns pre-partition on the group). Per pandas
+batch, :func:`_batch_mass` turns the rows into one int64 mass per distinct
+``(*groups, item)`` — occurrences, or the summed integer ``weight_col``
+(heavy DOMAINS by token mass rather than heavy tokens by occurrence) — and
+each sketch folds those masses per group, so the hash or the prune runs
+once per distinct item per batch, never per row.
 
-where err_bound is the total mass subtracted across all prunes — at most
-n/(k+1). Any item with true frequency > err_bound is GUARANTEED to survive
-(it cannot be decremented to zero). So the reduction is: per-partition O(k)
-summaries (narrow, one pass) → one tiny union → an O(parts·k) final merge,
-instead of a vocabulary-wide shuffle.
+Misra-Gries(k): per group <= k (item, est) counters plus the pruned mass.
+The fold adds a batch's masses and prunes back to k (subtract the (k+1)-th
+largest count, keep positives); merging partitions is the same add. For
+every surviving item, ``est <= true <= est + err_bound`` where err_bound is
+the total mass pruned — at most n/(k+1) — so any item with true frequency
+> err_bound is GUARANTEED to survive. Estimates depend on where partition
+and batch boundaries fall.
 
-The per-partition pass is Arrow-batched and vectorized: each pandas batch
-contributes its exact ``value_counts`` (C speed), which is then MERGED into
-the running summary — the sequential textbook loop is never run per row.
+Count-Min(width, depth) (Cormode & Muthukrishnan 2005, J. Algorithms
+55(1)): per group ``depth`` rows of ``width`` counters. Updates are pure
+additions, so the sketch of a union is the ELEMENTWISE SUM of the sketches
+and the merged table is PARTITION-INDEPENDENT (pinned in
+tests/test_sketches.py). Per probe: est >= true always, and
+est <= true + 2·N/width with probability 1 - (1/2)^depth. Hashing is
+pandas' keyed siphash (:func:`_cms_buckets`, one fixed 16-byte key per
+depth row) on both the build and the probe side, so the two can never
+disagree and nothing depends on PYTHONHASHSEED. No SQL engine shares it, so
+CMS queries are rows-only by contract, like every hash-seeded sketch here.
 """
 
 from __future__ import annotations
@@ -29,8 +48,65 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-_SUMMARY_SCHEMA = "item string, est long, pruned long"
+
+def _sketch_input(
+    df: DataFrame,
+    group_cols: tuple[str, ...],
+    item_col: str,
+    weight_col: str | None,
+) -> DataFrame:
+    """The columns a sketch kernel reads: string group keys and item, and
+    the weight as a long."""
+    cols = [F.col(c).cast("string").alias(c) for c in (*group_cols, item_col)]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("long").alias(weight_col))
+    return df.select(*cols)
+
+
+def _batch_mass(
+    pdf: pd.DataFrame,
+    group_cols: tuple[str, ...],
+    item_col: str,
+    weight_col: str | None,
+    op: str,
+) -> pd.Series:
+    """One pandas batch as int64 mass per distinct ``(*group_cols, item)``:
+    its occurrences, or its summed ``weight_col``. Rows with a NULL key or
+    weight drop out, and so do zero weights (zero mass must not occupy a
+    summary slot). A negative weight raises, naming ``op``: counters that
+    shrink break both est <= true <= est + err (Misra-Gries) and
+    est >= true (Count-Min)."""
+    keys = [*group_cols, item_col]
+    if weight_col is None:
+        return pdf[keys].dropna().groupby(keys, sort=False).size()
+    w = pdf[[*keys, weight_col]].dropna()
+    if (w[weight_col] < 0).any():
+        raise ValueError(
+            f"{op}: negative weights break the sketch's error contract"
+        )
+    w = w[w[weight_col] > 0]
+    return w.groupby(keys, sort=False)[weight_col].sum().astype("int64")
+
+
+def _by_group(
+    mass: pd.Series, n_groups: int
+) -> list[tuple[tuple, pd.Series]]:
+    """Split a batch's masses into ``(group tuple, item-indexed masses)``;
+    with no group columns the whole batch is the one group ``()``."""
+    if not n_groups:
+        return [((), mass)]
+    levels = list(range(n_groups))
+    return [
+        (g, sub.droplevel(levels))
+        for g, sub in mass.groupby(
+            [mass.index.get_level_values(i) for i in levels], sort=False
+        )
+    ]
+
+
+# --- Misra-Gries --------------------------------------------------------------
 
 
 def _prune(counts: "pd.Series", k: int) -> tuple["pd.Series", int]:
@@ -44,53 +120,100 @@ def _prune(counts: "pd.Series", k: int) -> tuple["pd.Series", int]:
     return counts[counts > 0], cut
 
 
+def _mg_fold(
+    counts: pd.Series, pruned: int, mass: pd.Series, k: int
+) -> tuple[pd.Series, int]:
+    """Fold one batch's masses into a Misra-Gries(k) summary: add, then
+    prune back to k. The per-batch step of the partition kernel and of
+    ``streaming.streaming_heavy_hitters``."""
+    counts, cut = _prune(counts.add(mass, fill_value=0).astype("int64"), k)
+    return counts, pruned + cut
+
+
+def _misra_gries(
+    df: DataFrame,
+    group_cols: tuple[str, ...],
+    item_col: str,
+    k: int,
+    weight_col: str | None,
+    op: str,
+) -> DataFrame:
+    """Per-partition Misra-Gries(k) summaries: for every group seen in the
+    partition (the one group ``()`` in every partition when ungrouped),
+    <= k ``(*groups, item, est, 0)`` rows plus ONE
+    ``(*groups, NULL, 0, pruned)`` error row. Output is
+    O(partitions · groups · k) whatever the input size."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    n = len(group_cols)
+
+    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the ungrouped summary of an empty partition is its error row
+        state: dict[tuple, tuple[pd.Series, int]] = (
+            {} if n else {(): (pd.Series(dtype="int64"), 0)}
+        )
+        for pdf in batches:
+            mass = _batch_mass(pdf, group_cols, item_col, weight_col, op)
+            for g, sub in _by_group(mass, n):
+                counts, pruned = state.get(g, (pd.Series(dtype="int64"), 0))
+                state[g] = _mg_fold(counts, pruned, sub, k)
+        rows = []
+        for g, (counts, pruned) in state.items():
+            rows += [(*g, item, est, 0) for item, est in counts.items()]
+            rows.append((*g, None, 0, pruned))
+        yield pd.DataFrame(rows, columns=[*group_cols, "item", "est", "pruned"])
+
+    schema = "".join(f"{c} string, " for c in group_cols)
+    return _sketch_input(df, group_cols, item_col, weight_col).mapInPandas(
+        summarize, schema + "item string, est long, pruned long"
+    )
+
+
 def misra_gries_summaries(
     df: DataFrame, item_col: str, k: int = 64, weight_col: str | None = None
 ) -> DataFrame:
     """Per-partition Misra-Gries(k) summaries: <= k rows of (item, est, 0)
-    per partition plus ONE (NULL, 0, pruned_total) error row. Output is
-    O(partitions · k) whatever the input size.
+    per partition plus ONE (NULL, 0, pruned_total) error row. ``weight_col``
+    (integer, positive) counts mass instead of occurrences under the same
+    contract."""
+    return _misra_gries(df, (), item_col, k, weight_col, "misra_gries_summaries")
 
-    ``weight_col`` (integer) generalizes to weighted frequencies — heavy
-    DOMAINS by token mass instead of heavy tokens by occurrence — with the
-    same contract: est <= true_weight <= est + err (the weighted MG of the
-    mergeable-summaries paper; the prune subtracts the (k+1)-th largest
-    weighted mass). Weights must be POSITIVE — the contract is meaningless
-    under negative mass, so a negative weight raises (in the task); zero-
-    weight rows are dropped rather than wasting summary slots."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
 
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        counts = pd.Series(dtype="int64")
-        pruned = 0
-        for pdf in batches:
-            col = pdf[item_col]
-            if weight_col is None:
-                batch = col.dropna().value_counts()
-            else:
-                w = pdf[[item_col, weight_col]].dropna()
-                if (w[weight_col] < 0).any():
-                    raise ValueError(
-                        "misra_gries_summaries: negative weights break the "
-                        "est <= true <= est + err contract"
-                    )
-                w = w[w[weight_col] > 0]  # zero mass must not occupy a slot
-                batch = w.groupby(item_col, sort=False)[weight_col].sum()
-            counts = counts.add(batch, fill_value=0).astype("int64")
-            counts, cut = _prune(counts, k)
-            pruned += cut
-        out = pd.DataFrame(
-            {"item": counts.index.astype(str), "est": counts.values}
-        )
-        out["pruned"] = 0
-        err = pd.DataFrame({"item": [None], "est": [0], "pruned": [pruned]})
-        yield pd.concat([out, err], ignore_index=True)
-
-    cols = [F.col(item_col).cast("string").alias(item_col)]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(weight_col))
-    return df.select(*cols).mapInPandas(summarize, _SUMMARY_SCHEMA)
+def _heavy_hitters(
+    df: DataFrame,
+    group_cols: tuple[str, ...],
+    item_col: str,
+    k: int,
+    top: int,
+    weight_col: str | None,
+    op: str,
+) -> DataFrame:
+    """Merge the checkpointed summaries (two consumers: the per-item sums
+    and the per-group error bound) and keep each group's ``top`` largest
+    estimates. The cut is a TakeOrdered without groups, a group-partitioned
+    ranking window with them: a window with no partition key would add a
+    single-partition exchange."""
+    summaries = _misra_gries(
+        df, group_cols, item_col, k, weight_col, op
+    ).localCheckpoint(eager=True)
+    err = summaries.groupBy(*group_cols).agg(
+        F.sum("pruned").cast("bigint").alias("err_bound")
+    )
+    merged = (
+        summaries.where(F.col("item").isNotNull())
+        .groupBy(*group_cols, "item")
+        .agg(F.sum("est").cast("bigint").alias("est_count"))
+    )
+    ranked = merged.join(F.broadcast(err), list(group_cols) or None)
+    order = [F.col("est_count").desc(), F.col("item").asc()]
+    if not group_cols:
+        return ranked.orderBy(*order).limit(top)
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return (
+        ranked.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= top)
+        .drop("__rn")
+    )
 
 
 def heavy_hitters(
@@ -100,116 +223,16 @@ def heavy_hitters(
     top: int = 20,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Approximate top items: merge the per-partition Misra-Gries(k)
-    summaries and return the ``top`` largest estimates with the global
-    error bound attached. Contract (pinned in tests/test_sketches.py):
+    """Approximate top items — ``(item, est_count, err_bound)``: the
+    ``top`` largest merged Misra-Gries(k) estimates with the global error
+    bound attached. Contract (pinned in tests/test_sketches.py):
     ``est <= true <= est + err_bound`` for every returned item, and every
     item with true count > err_bound survives the sketch.
 
     Plan: narrow one-pass summaries → O(parts·k)-row shuffle on item →
     TakeOrdered cut; the error bound rides as a broadcast 1-row scalar
-    agg. The token stream itself never shuffles."""
-    summaries = misra_gries_summaries(df, item_col, k=k, weight_col=weight_col)
-    # one tiny frame feeds both branches; without a checkpoint each branch
-    # would re-run the full per-partition summarize pass over the corpus
-    summaries = summaries.localCheckpoint(eager=True)
-    err = F.broadcast(
-        summaries.agg(F.sum("pruned").cast("bigint").alias("err_bound"))
-    )
-    merged = (
-        summaries.where(F.col("item").isNotNull())
-        .groupBy("item")
-        .agg(F.sum("est").cast("bigint").alias("est_count"))
-    )
-    return (
-        merged.crossJoin(err)
-        .orderBy(F.col("est_count").desc(), F.col("item").asc())
-        .limit(top)
-    )
-
-
-_GROUPED_SUMMARY_SCHEMA = "g string, item string, est long, pruned long"
-
-
-def grouped_misra_gries_summaries(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    k: int = 64,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """PER-GROUP per-partition Misra-Gries(k): for every group value seen
-    in the partition, <= k (g, item, est, 0) rows plus ONE (g, NULL, 0,
-    pruned) error row — the grouped tier of the summary family (top tokens
-    PER LANGUAGE, heavy URLs per tenant). Output is O(partitions · groups
-    · k); the item stream never shuffles. The per-group error contract is
-    the ungrouped one applied within each group: est <= true <= est +
-    err(g).
-
-    Memory note: per-partition state is O(groups-in-partition · k) — for
-    high-cardinality group columns pre-partition by group (repartition on
-    g) so each task holds only its groups' sketches; the catalog query's
-    group is `lang` (a handful of values), where any partitioning is fine.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[str, pd.Series] = {}
-        pruned: dict[str, int] = {}
-        sel = [group_col, item_col] + ([weight_col] if weight_col else [])
-        for pdf in batches:
-            cols = pdf[sel].dropna(subset=[group_col, item_col])
-            if weight_col is None:
-                batch = cols.groupby([group_col, item_col], sort=False).size()
-            else:
-                if (cols[weight_col] < 0).any():
-                    raise ValueError(
-                        "grouped_misra_gries_summaries: negative weights "
-                        "break the est <= true <= est + err contract"
-                    )
-                cols = cols[cols[weight_col] > 0]
-                batch = cols.groupby([group_col, item_col], sort=False)[
-                    weight_col
-                ].sum()
-            for g, sub in batch.groupby(level=0, sort=False):
-                s = sub.droplevel(0).astype("int64")
-                cur = state.get(g)
-                cur = s if cur is None else cur.add(s, fill_value=0).astype("int64")
-                cur, cut = _prune(cur, k)
-                state[g] = cur
-                pruned[g] = pruned.get(g, 0) + cut
-        frames = []
-        for g, counts in state.items():
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "g": g,
-                        "item": counts.index.astype(str),
-                        "est": counts.values,
-                        "pruned": 0,
-                    }
-                )
-            )
-            frames.append(
-                pd.DataFrame(
-                    {"g": [g], "item": [None], "est": [0], "pruned": [pruned[g]]}
-                )
-            )
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(
-                {"g": [], "item": [], "est": [], "pruned": []}
-            ).astype({"g": str, "item": str, "est": "int64", "pruned": "int64"})
-
-    cols = [
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(item_col).cast("string").alias(item_col),
-    ]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(weight_col))
-    return df.select(*cols).mapInPandas(summarize, _GROUPED_SUMMARY_SCHEMA)
+    agg."""
+    return _heavy_hitters(df, (), item_col, k, top, weight_col, "heavy_hitters")
 
 
 def grouped_heavy_hitters(
@@ -220,63 +243,21 @@ def grouped_heavy_hitters(
     top: int = 10,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Approximate top items PER GROUP: merge the per-partition grouped
-    summaries and keep each group's ``top`` largest estimates with that
-    group's error bound attached — ``(g, item, est_count, err_bound)``.
-    Same contract as :func:`heavy_hitters`, scoped per group: within group
-    g, est <= true <= est + err_bound(g), and any item with
+    """Approximate top items PER GROUP — ``(g, item, est_count,
+    err_bound)``: :func:`heavy_hitters` within each group (top tokens per
+    language, heavy URLs per tenant). Within group g,
+    est <= true <= est + err_bound(g), and any item with
     true > err_bound(g) survives.
 
-    Plan: one narrow summaries pass (checkpointed — two consumers), an
-    O(parts·groups·k)-row shuffle keyed (g, item), a groups-sized error
-    agg joined back on g, and a g-partitioned ranking window for the cut.
-    """
-    summaries = grouped_misra_gries_summaries(
-        df, group_col, item_col, k=k, weight_col=weight_col
-    ).localCheckpoint(eager=True)
-    err = summaries.groupBy("g").agg(
-        F.sum("pruned").cast("bigint").alias("err_bound")
-    )
-    merged = (
-        summaries.where(F.col("item").isNotNull())
-        .groupBy("g", "item")
-        .agg(F.sum("est").cast("bigint").alias("est_count"))
-    )
-    w = Window.partitionBy("g").orderBy(
-        F.col("est_count").desc(), F.col("item").asc()
-    )
-    return (
-        merged.join(err, "g")
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top)
-        .drop("__rn")
-    )
+    Plan: the same summaries pass and merge keyed (g, item), a
+    groups-sized error agg broadcast back on g, and a g-partitioned
+    ranking window for the cut."""
+    return _heavy_hitters(
+        df, (group_col,), item_col, k, top, weight_col, "grouped_heavy_hitters"
+    ).withColumnRenamed(group_col, "g")
 
 
-# --- Count-Min sketch ---------------------------------------------------------
-#
-# The point-frequency member of the mergeable-sketch family (Cormode &
-# Muthukrishnan 2005, "An improved data stream summary: the count-min sketch
-# and its applications", J. Algorithms 55(1)): HLL answers "how many
-# distinct", KLL "what quantile", Misra-Gries "which items are heavy", CMS
-# "how often is THIS item" for any item, in O(depth·width) space.
-#
-# Why it merges exactly: a CMS is depth hash rows of width counters and
-# updates are pure additions, so the sketch of a union is the ELEMENTWISE SUM
-# of the sketches — per-partition tables combine with no error beyond what
-# each table already carries, and (unlike Misra-Gries) the merged estimates
-# are PARTITION-INDEPENDENT: any partitioning of the same rows yields the
-# same table (pinned in tests/test_sketches.py). Guarantee per probe:
-# est >= true always (counters only overcount), and
-# est <= true + 2·N/width with probability 1 - (1/2)^depth.
-#
-# Hashing: pandas' keyed siphash (``pd.util.hash_array``; fixed 16-byte key
-# per depth row), evaluated Arrow-batched on BOTH the build side and the
-# probe side — the two can never disagree, and nothing depends on
-# PYTHONHASHSEED. No SQL engine shares it, so CMS queries are rows-only by
-# contract, like every hash-seeded sketch here.
-
-_CMS_SCHEMA = "d int, counts array<long>"
+# --- Count-Min ----------------------------------------------------------------
 
 
 def _cms_key(d: int) -> str:
@@ -291,63 +272,53 @@ def _cms_buckets(values, d: int, width: int):
     return (h % np.uint64(width)).astype("int64")
 
 
-def count_min_table(
+def _count_min(
     df: DataFrame,
+    group_cols: tuple[str, ...],
     item_col: str,
-    width: int = 2048,
-    depth: int = 4,
-    weight_col: str | None = None,
+    width: int,
+    depth: int,
+    weight_col: str | None,
+    op: str,
 ) -> DataFrame:
-    """The merged Count-Min table: exactly ``depth`` rows of
-    (d, counts array<long>[width]).
-
-    Plan shape (the sketch-family contract): one narrow Arrow-batched pass
-    reduces each partition to a depth×width numpy table (per batch the
-    items are bucketed by exact ``value_counts`` first, so the hash runs
-    once per DISTINCT item per batch, not once per row); only the
-    O(parts·depth) summary rows move, merged by an O(depth·width)
-    posexplode + sum — the item stream itself never shuffles.
-    ``weight_col`` accumulates integer mass instead of occurrences
-    (negative weights raise — counters must only grow or the
-    overcount-only guarantee dies)."""
+    """Merged Count-Min tables: for every group, exactly ``depth`` rows of
+    ``(*groups, d, counts array<long>[width])``. One narrow pass reduces
+    each partition to a depth×width numpy table per group seen; only
+    O(parts·groups·depth) rows move, merged by an O(groups·depth·width)
+    posexplode + sum."""
     import numpy as np
 
     if width < 1 or depth < 1:
         raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
+    n = len(group_cols)
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        table = np.zeros((depth, width), dtype="int64")
+        # the ungrouped table of an empty partition is all zeros, not absent
+        tables = {} if n else {(): np.zeros((depth, width), dtype="int64")}
         for pdf in batches:
-            if weight_col is None:
-                batch = pdf[item_col].dropna().value_counts()
-            else:
-                w = pdf[[item_col, weight_col]].dropna()
-                if (w[weight_col] < 0).any():
-                    raise ValueError(
-                        "count_min_table: negative weights break the "
-                        "overcount-only guarantee"
-                    )
-                batch = w.groupby(item_col, sort=False)[weight_col].sum()
-            if not len(batch):
-                continue
-            counts = batch.values.astype("int64")
-            for d in range(depth):
-                np.add.at(
-                    table[d], _cms_buckets(batch.index, d, width), counts
-                )
-        yield pd.DataFrame(
-            {"d": range(depth), "counts": [row.tolist() for row in table]}
-        )
+            mass = _batch_mass(pdf, group_cols, item_col, weight_col, op)
+            for g, sub in _by_group(mass, n):
+                tab = tables.get(g)
+                if tab is None:
+                    tab = tables[g] = np.zeros((depth, width), dtype="int64")
+                for d in range(depth):
+                    np.add.at(tab[d], _cms_buckets(sub.index, d, width), sub.values)
+        rows = [
+            (*g, d, row.tolist())
+            for g, tab in tables.items()
+            for d, row in enumerate(tab)
+        ]
+        yield pd.DataFrame(rows, columns=[*group_cols, "d", "counts"])
 
-    cols = [F.col(item_col).cast("string").alias(item_col)]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(weight_col))
-    per_part = df.select(*cols).mapInPandas(summarize, _CMS_SCHEMA)
+    schema = "".join(f"{c} string, " for c in group_cols)
+    per_part = _sketch_input(df, group_cols, item_col, weight_col).mapInPandas(
+        summarize, schema + "d int, counts array<long>"
+    )
     return (
-        per_part.select("d", F.posexplode("counts").alias("pos", "c"))
-        .groupBy("d", "pos")
+        per_part.select(*group_cols, "d", F.posexplode("counts").alias("pos", "c"))
+        .groupBy(*group_cols, "d", "pos")
         .agg(F.sum("c").alias("c"))
-        .groupBy("d")
+        .groupBy(*group_cols, "d")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "c"))),
@@ -357,7 +328,18 @@ def count_min_table(
     )
 
 
-_GROUPED_CMS_SCHEMA = "g string, d int, counts array<long>"
+def count_min_table(
+    df: DataFrame,
+    item_col: str,
+    width: int = 2048,
+    depth: int = 4,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The merged Count-Min table: exactly ``depth`` rows of
+    (d, counts array<long>[width]). ``weight_col`` accumulates integer mass
+    instead of occurrences (negative weights raise — counters must only
+    grow or the overcount-only guarantee dies)."""
+    return _count_min(df, (), item_col, width, depth, weight_col, "count_min_table")
 
 
 def grouped_count_min_table(
@@ -369,222 +351,100 @@ def grouped_count_min_table(
     weight_col: str | None = None,
 ) -> DataFrame:
     """PER-GROUP merged Count-Min tables: for every group value, exactly
-    ``depth`` rows of (g, d, counts array<long>[width]) — the grouped tier
-    of the CMS family (per-language token frequencies, per-tenant URL
-    counts), completing the grouped sketch set next to grouped MG (r11)
-    and grouped KLL (r11).
+    ``depth`` rows of (g, d, counts array<long>[width]) — per-language
+    token frequencies, per-tenant URL counts. The bucket of an item does
+    not depend on its group, so a group's table IS the ungrouped table of
+    the group-filtered stream, bit for bit, and partition-independent
+    (pinned in tests/test_sketches.py)."""
+    return _count_min(
+        df, (group_col,), item_col, width, depth, weight_col,
+        "grouped_count_min_table",
+    ).withColumnRenamed(group_col, "g")
 
-    Same exact-merge property as the ungrouped table, applied within each
-    group: updates are pure additions, so each group's merged table is the
-    elementwise sum of its per-partition tables and is PARTITION-
-    INDEPENDENT — identical to building a separate CMS over only that
-    group's rows (pinned in tests/test_sketches.py). Hash rows are keyed
-    siphash shared with the ungrouped build (the bucket of an item does
-    not depend on its group), so a group's table IS the ungrouped table of
-    the group-filtered stream, bit for bit.
 
-    Plan shape: one narrow Arrow-batched pass reduces each partition to a
-    depth×width table PER GROUP SEEN (per batch the items are bucketed by
-    exact per-group value_counts first — the hash runs once per distinct
-    (g, item) per batch); only O(parts·groups·depth) summary rows move,
-    merged by an O(groups·depth·width) posexplode + sum. The item stream
-    never shuffles.
+@F.pandas_udf(T.ArrayType(T.IntegerType()))
+def _probe_buckets(items: pd.Series, width: pd.Series, depth: pd.Series) -> pd.Series:
+    """A string probe's Count-Min buckets in a ``width``×``depth`` table:
+    the build side's keyed siphash (:func:`_cms_buckets`). NULL probes get
+    NULL buckets (→ NULL est_count): the build side drops NULLs, so
+    stringifying a NULL to the literal 'None' would return an arbitrary
+    bucket's overcount instead. So does a probe with no table."""
+    out = pd.Series([None] * len(items), dtype=object, index=items.index)
+    live = items.notna() & (width > 0)
+    shapes = [width[live].astype("int64"), depth[live].astype("int64")]
+    for (w, n), sub in items[live].astype(str).groupby(shapes, sort=False):
+        cols = [_cms_buckets(sub.values, d, w) for d in range(n)]
+        out.loc[sub.index] = pd.Series([list(bs) for bs in zip(*cols)], index=sub.index)
+    return out
 
-    Memory note (the grouped-MG one): per-partition state is
-    O(groups-in-partition · depth · width) — for high-cardinality group
-    columns pre-partition on the group so each task holds only its groups'
-    tables; the catalog query's group is ``lang`` (a handful of values).
-    """
-    import numpy as np
 
-    if width < 1 or depth < 1:
-        raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
+def _cms_probe(
+    table: DataFrame,
+    probes: DataFrame,
+    on: tuple[tuple[str, str], ...],
+    item_col: str,
+) -> DataFrame:
+    """``probes`` plus ``est_count``, the CMS point query: the min over the
+    depth rows of the probe's counter in its group's table. ``on`` pairs
+    each table group column with the probe column it matches.
 
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tables: dict[str, "np.ndarray"] = {}
-        sel = [group_col, item_col] + ([weight_col] if weight_col else [])
-        for pdf in batches:
-            cols = pdf[sel].dropna(subset=[group_col, item_col])
-            if weight_col is None:
-                batch = cols.groupby([group_col, item_col], sort=False).size()
-            else:
-                if (cols[weight_col] < 0).any():
-                    raise ValueError(
-                        "grouped_count_min_table: negative weights break "
-                        "the overcount-only guarantee"
-                    )
-                batch = cols.groupby([group_col, item_col], sort=False)[
-                    weight_col
-                ].sum()
-            for g, sub in batch.groupby(level=0, sort=False):
-                items = sub.droplevel(0)
-                counts = items.values.astype("int64")
-                tab = tables.get(g)
-                if tab is None:
-                    tab = tables[g] = np.zeros((depth, width), dtype="int64")
-                for d in range(depth):
-                    np.add.at(
-                        tab[d], _cms_buckets(items.index, d, width), counts
-                    )
-        frames = [
-            pd.DataFrame(
-                {
-                    "g": g,
-                    "d": range(depth),
-                    "counts": [row.tolist() for row in tab],
-                }
-            )
-            for g, tab in tables.items()
-        ]
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-        else:
-            # counts must be object-dtyped: an empty float64 column can't
-            # convert to Arrow list<int64>
-            yield pd.DataFrame(
-                {
-                    "g": pd.Series([], dtype=str),
-                    "d": pd.Series([], dtype="int32"),
-                    "counts": pd.Series([], dtype=object),
-                }
-            )
-
-    cols = [
-        F.col(group_col).cast("string").alias(group_col),
-        F.col(item_col).cast("string").alias(item_col),
-    ]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias(weight_col))
-    per_part = df.select(*cols).mapInPandas(summarize, _GROUPED_CMS_SCHEMA)
+    Each group's table folds to ONE array<array<long>> row — bounded by the
+    sketch parameters times the group cardinality, never by the data —
+    attached by a left equi-join on the group keys (AQE broadcasts it while
+    the folded side stays small), or by a 1-row broadcast crossJoin when
+    there are none. Width and depth are read from the attached table, so
+    the probe cannot disagree with the build; the min-of-counters is
+    JVM-side zip_with + array_min."""
+    keys = [f"__g{i}" for i in range(len(on))]
+    folded = table.groupBy(
+        *[F.col(t).alias(key) for (t, _), key in zip(on, keys)]
+    ).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("d", "counts"))),
+            lambda s: s["counts"],
+        ).alias("__cms")
+    )
+    if on:
+        cond = [F.col(p).cast("string") == F.col(key) for (_, p), key in zip(on, keys)]
+        attached = probes.join(folded, cond, "left")
+    else:
+        attached = probes.crossJoin(F.broadcast(folded))
+    cms = F.col("__cms")
     return (
-        per_part.select("g", "d", F.posexplode("counts").alias("pos", "c"))
-        .groupBy("g", "d", "pos")
-        .agg(F.sum("c").alias("c"))
-        .groupBy("g", "d")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("counts")
+        attached.withColumn(
+            "__bk",
+            _probe_buckets(
+                F.col(item_col).cast("string"),
+                F.size(F.try_element_at(cms, F.lit(1))),
+                F.size(cms),
+            ),
         )
+        .withColumn(
+            "est_count",
+            F.array_min(
+                F.zip_with(
+                    cms, "__bk", lambda row, b: F.element_at(row, b + F.lit(1))
+                )
+            ).cast("bigint"),
+        )
+        .drop("__bk", "__cms", *keys)
     )
 
 
-def _probe_buckets(width: int, depth: int):
-    """The Arrow-batched pandas_udf giving a string probe its ``depth``
-    Count-Min buckets: the build side's keyed siphash (:func:`_cms_buckets`)
-    over a ``width``-wide table. NULL probes get NULL buckets (→ NULL
-    est_count): the build side drops NULLs, so stringifying a NULL to the
-    literal 'None' would return an arbitrary bucket's overcount instead
-    (ADVICE r10)."""
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(items: pd.Series) -> pd.Series:
-        out = pd.Series([None] * len(items), dtype=object, index=items.index)
-        nn = items.dropna().astype(str)
-        if len(nn):
-            cols = [_cms_buckets(nn.values, d, width) for d in range(depth)]
-            out.loc[nn.index] = pd.Series(
-                [list(bs) for bs in zip(*cols)], index=nn.index
-            )
-        return out
-
-    return buckets
+def cms_estimates(table: DataFrame, probes: DataFrame, item_col: str) -> DataFrame:
+    """``probes`` plus an ``est_count`` column against a
+    :func:`count_min_table`. NULL probe items return a NULL ``est_count``
+    (the build side drops NULLs, so NULL — not some bucket's overcount — is
+    the only honest answer)."""
+    return _cms_probe(table, probes, (), item_col)
 
 
 def grouped_cms_estimates(
-    table: DataFrame,
-    probes: DataFrame,
-    group_col: str,
-    item_col: str,
-    width: int = 2048,
-    depth: int = 4,
+    table: DataFrame, probes: DataFrame, group_col: str, item_col: str
 ) -> DataFrame:
     """``probes`` (carrying a ``group_col`` and an ``item_col``) plus an
-    ``est_count`` column: the CMS point query against THAT GROUP's table.
-    ``width``/``depth`` MUST match the build parameters.
-
-    NULL probe items return NULL (build side drops NULLs — the ungrouped
-    rule); a probe whose group has no table (group never seen) also
-    returns NULL, not 0 — "no sketch" is not "count zero".
-
-    Plan: each group's table folds to ONE (g, array<array<long>>) row —
-    O(groups·depth·width) longs, bounded by the sketch parameters times
-    the group cardinality, never by the data — attached by an equi-join on
-    g (AQE broadcasts it while the folded side stays small); probe buckets
-    come from the same Arrow-batched keyed-siphash UDF as the build, and
-    the min-of-counters is JVM-side zip_with + array_min."""
-    folded = table.groupBy(F.col("g").alias("__g")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "counts"))),
-            lambda s: s["counts"],
-        ).alias("__cms")
-    )
-    return (
-        probes.withColumn(
-            "__bk", _probe_buckets(width, depth)(F.col(item_col).cast("string"))
-        )
-        .join(
-            folded,
-            F.col(group_col).cast("string") == F.col("__g"),
-            "left",
-        )
-        .withColumn(
-            "est_count",
-            F.array_min(
-                F.zip_with(
-                    "__cms",
-                    "__bk",
-                    lambda row, b: F.element_at(row, b + F.lit(1)),
-                )
-            ).cast("bigint"),
-        )
-        .drop("__bk", "__cms", "__g")
-    )
-
-
-def cms_estimates(
-    table: DataFrame,
-    probes: DataFrame,
-    item_col: str,
-    width: int = 2048,
-    depth: int = 4,
-) -> DataFrame:
-    """``probes`` plus an ``est_count`` column: min over the ``depth`` rows
-    of the probe's counter — the classic CMS point query. ``width``/
-    ``depth`` MUST match the table's build parameters (the hash keys are
-    derived from the depth index).
-
-    NULL probe items return a NULL ``est_count`` (the build side drops
-    NULLs, so 0/NULL — not some bucket's overcount — is the only honest
-    answer).
-
-    Plan: the table folds into ONE array-of-arrays row — O(depth·width)
-    longs, bounded by the sketch parameters, never by the data — attached
-    by broadcast crossJoin (the 1-row model-attach pattern); probe buckets
-    come from one Arrow-batched pandas_udf sharing the build-side hash, and
-    the min-of-counters is JVM-side ``zip_with`` + ``array_min``."""
-    folded = table.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "counts"))),
-            lambda s: s["counts"],
-        ).alias("__cms")
-    )
-    return (
-        probes.withColumn(
-            "__bk", _probe_buckets(width, depth)(F.col(item_col).cast("string"))
-        )
-        .crossJoin(F.broadcast(folded))
-        .withColumn(
-            "est_count",
-            F.array_min(
-                F.zip_with(
-                    "__cms",
-                    "__bk",
-                    lambda row, b: F.element_at(row, b + F.lit(1)),
-                )
-            ).cast("bigint"),
-        )
-        .drop("__bk", "__cms")
-    )
+    ``est_count`` column: the CMS point query against THAT GROUP's table
+    from :func:`grouped_count_min_table`. NULL probe items return NULL, and
+    so does a probe whose group has no table — "no sketch" is not "count
+    zero"."""
+    return _cms_probe(table, probes, (("g", group_col),), item_col)

@@ -1336,7 +1336,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     return (
-        cms_estimates(tab, true_top, "tok", width=_CMS_W, depth=_CMS_D)
+        cms_estimates(tab, true_top, "tok")
         .select("tok", "true_count", "est_count")
         .orderBy(F.col("true_count").desc(), F.col("tok").asc())
     )
@@ -1380,7 +1380,7 @@ def q_group_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("__rn")
     )
     return (
-        grouped_cms_estimates(tab, true_top, "lang", "tok", width=_CMS_W, depth=_CMS_D)
+        grouped_cms_estimates(tab, true_top, "lang", "tok")
         .select("lang", "tok", "true_count", "est_count")
         .orderBy("lang", F.col("true_count").desc(), "tok")
     )

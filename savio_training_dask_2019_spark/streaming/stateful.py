@@ -86,16 +86,16 @@ def streaming_heavy_hitters(
     State per key is EXACTLY the mergeable summary: <= k (item, est) pairs
     plus one pruned-mass counter — O(k) scalars, never a row buffer, so
     key cardinality × k bounds cluster state (the state-design rule at the
-    top of this module). Each batch folds in via its exact value_counts +
-    the mergeable prune, identical to the batch operator's per-partition
-    pass. Emits the full summary per updated key each batch:
+    top of this module). Each batch folds in through the batch operator's
+    own per-batch mass and add-then-prune step (``sketches._batch_mass``,
+    ``sketches._mg_fold``). Emits the full summary per updated key each batch:
     (group, item, est, err).
 
     ``weight_col`` mirrors the batch operator: weighted frequencies (heavy
     domains by token mass across a stream) under the same contract —
     weights must be positive (negative raises, zero rows are dropped
     rather than occupying summary slots)."""
-    from ..operators.sketches import _prune
+    from ..operators.sketches import _batch_mass, _mg_fold
 
     def update(
         key_tuple: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -106,27 +106,12 @@ def streaming_heavy_hitters(
         else:
             counts, pruned = pd.Series(dtype="int64"), 0
         for pdf in pdfs:
-            # cast to str like the batch operator: state declares
+            mass = _batch_mass(pdf, (), item, weight_col, "streaming_heavy_hitters")
+            # str items like the batch operator: state declares
             # array<string>, and a raw-typed index would split the same
             # item across entries after a state round-trip
-            if weight_col is None:
-                batch = pdf[item].dropna().astype(str).value_counts()
-            else:
-                w = pdf[[item, weight_col]].dropna()
-                if (w[weight_col] < 0).any():
-                    raise ValueError(
-                        "streaming_heavy_hitters: negative weights break "
-                        "the est <= true <= est + err contract"
-                    )
-                w = w[w[weight_col] > 0]
-                batch = (
-                    w.groupby(w[item].astype(str), sort=False)[weight_col]
-                    .sum()
-                    .astype("int64")
-                )
-            counts = counts.add(batch, fill_value=0).astype("int64")
-            counts, cut = _prune(counts, k)
-            pruned += int(cut)
+            mass.index = mass.index.astype(str)
+            counts, pruned = _mg_fold(counts, pruned, mass, k)
         state.update((list(counts.index), [int(x) for x in counts.values], pruned))
         yield pd.DataFrame(
             {

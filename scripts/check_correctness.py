@@ -9,13 +9,18 @@ Usage:
 Env:
     SF_DIR (default /root/testdata/sf0.01)
     REPLICA_OUT (optional) — also write the per-query summary as JSON
-        ({name: {status, rows, secs, detail}, ...} + a _meta block), the
-        round artifact VERDICT r13 #4 asks for (REPLICA_r{N}.json): the
-        judge diffs artifacts instead of re-running the whole catalog.
+        ({name: {status, rows, secs, detail, sha256}, ...} + a _meta block)
+        so runs are compared by diffing artifacts instead of re-running the
+        whole catalog. ``sha256`` is the digest of the canonical result
+        (:func:`result_sha256`) for every query that ran, rows-only ones
+        included: a refactor of a rows-only query is checked by diffing the
+        hashes of the parent's report and the change's, run with the same
+        SF_DIR and SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -69,6 +74,12 @@ def canon_df(df: pd.DataFrame) -> list[tuple]:
     return out
 
 
+def result_sha256(df: pd.DataFrame) -> str:
+    """sha256 of :func:`canon_df`: the same value for the same row set,
+    whatever the row and column order."""
+    return hashlib.sha256(repr(canon_df(df)).encode()).hexdigest()
+
+
 def main() -> int:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
     only = set(sys.argv[1:])
@@ -103,6 +114,7 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = qs[name](spark, sf_dir).toPandas()
+            digest = result_sha256(sdf)
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {type(exc).__name__}: {exc}")
             failures.append(name)
@@ -112,6 +124,7 @@ def main() -> int:
                 "rows": None,
                 "secs": round(time.time() - t0, 1),
                 "detail": f"spark error: {type(exc).__name__}: {exc}",
+                "sha256": None,
             }
             continue
         if name not in oracles:
@@ -123,6 +136,7 @@ def main() -> int:
                 "rows": len(sdf),
                 "secs": secs,
                 "detail": None,
+                "sha256": digest,
             }
             continue
         try:
@@ -136,6 +150,7 @@ def main() -> int:
                 "rows": len(sdf),
                 "secs": round(time.time() - t0, 1),
                 "detail": f"oracle error: {type(exc).__name__}: {exc}",
+                "sha256": digest,
             }
             continue
 
@@ -166,6 +181,7 @@ def main() -> int:
                 "rows": len(sdf),
                 "secs": secs,
                 "detail": "; ".join(problems),
+                "sha256": digest,
             }
         else:
             print(f"ok    {name}: {len(sdf)} rows ({secs}s)")
@@ -175,6 +191,7 @@ def main() -> int:
                 "rows": len(sdf),
                 "secs": secs,
                 "detail": None,
+                "sha256": digest,
             }
 
     print(f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAILED of {len(names)}")

@@ -14,7 +14,7 @@ from savio_training_dask_2019_spark.operators import (
     brute_knn_join,
     embedding_near_dup_pairs,
     keep_first_by_hash,
-    minhash_near_dup_pairs,
+    minhash_banded_pairs,
     ngram_jaccard_pairs,
     simhash,
     simhash_near_dup_pairs,
@@ -154,7 +154,7 @@ def test_minhash_banded_matches_exact_jaccard_set(spark):
 
 def test_minhash_finds_planted_dups(docs_df):
     pairs = {(r["id_a"], r["id_b"])
-             for r in minhash_near_dup_pairs(
+             for r in minhash_banded_pairs(
                  docs_df, "text", "doc_id", n=2, max_jaccard_distance=0.99).collect()}
     assert (1, 3) in pairs
 

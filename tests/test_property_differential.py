@@ -596,7 +596,7 @@ def test_cms_overcount_only_any_stream(items, width, depth, spark):
     probes = spark.createDataFrame(
         [(t, c) for t, c in true.items()], "tok string, true_count long"
     )
-    est = cms_estimates(tab, probes, "tok", width=width, depth=depth).collect()
+    est = cms_estimates(tab, probes, "tok").collect()
     assert all(r["est_count"] >= r["true_count"] for r in est)
 
 

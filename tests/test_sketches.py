@@ -190,7 +190,7 @@ def test_cms_overcount_only_and_error_bound(spark):
     w, d = 1024, 4
     tab = count_min_table(df, "tok", width=w, depth=d)
     true = df.groupBy("tok").agg(F.count(F.lit(1)).alias("true_count"))
-    est = cms_estimates(tab, true, "tok", width=w, depth=d).collect()
+    est = cms_estimates(tab, true, "tok").collect()
     assert len(est) == 60
     assert all(r["est_count"] >= r["true_count"] for r in est)
     assert max(r["est_count"] - r["true_count"] for r in est) <= 2 * n // w
@@ -227,11 +227,11 @@ def test_cms_weighted_and_unseen_probes(spark):
     w, d = 2048, 4
     tab = count_min_table(df, "src", width=w, depth=d, weight_col="mass")
     true = df.groupBy("src").agg(F.sum("mass").alias("true_count"))
-    est = cms_estimates(tab, true, "src", width=w, depth=d).collect()
+    est = cms_estimates(tab, true, "src").collect()
     assert all(r["est_count"] >= r["true_count"] for r in est)
 
     unseen = spark.createDataFrame([("never-inserted-xyz",)], "src string")
-    [u] = cms_estimates(tab, unseen, "src", width=w, depth=d).collect()
+    [u] = cms_estimates(tab, unseen, "src").collect()
     assert u["est_count"] >= 0
 
     neg = spark.createDataFrame([("a", -1)], "src string, mass long")
@@ -239,6 +239,52 @@ def test_cms_weighted_and_unseen_probes(spark):
         count_min_table(neg, "src", width=w, depth=d, weight_col="mass").collect()
     with pytest.raises(ValueError, match="width/depth"):
         count_min_table(df, "src", width=0, depth=4)
+
+
+def test_cms_probe_reads_width_and_depth_from_the_table(spark):
+    """The probe takes its width and depth from the table it is attached
+    to, so a non-default build is probed with nothing passed: every
+    estimate is the min over the table's own depth rows of the item's
+    bucket in its own width (est >= true follows), ungrouped and grouped."""
+    import random
+
+    from savio_training_dask_2019_spark.operators.sketches import (
+        _cms_buckets,
+        cms_estimates,
+        count_min_table,
+        grouped_cms_estimates,
+        grouped_count_min_table,
+    )
+
+    rng = random.Random(7)
+    rows = [(rng.choice("xy"), f"it{rng.randrange(300)}") for _ in range(20_000)]
+    df = spark.createDataFrame(rows, "g string, tok string")
+    w, d = 512, 4
+    true = Counter(rows)
+
+    def expected(table: dict[int, list[int]], tok: str) -> int:
+        assert len(table) == d and all(len(c) == w for c in table.values())
+        return min(table[i][_cms_buckets([tok], i, w)[0]] for i in range(d))
+
+    tab = count_min_table(df, "tok", width=w, depth=d)
+    solo = {r["d"]: r["counts"] for r in tab.collect()}
+    probes = df.groupBy("tok").agg(F.count(F.lit(1)).alias("true_count"))
+    est = cms_estimates(tab, probes, "tok").collect()
+    assert len(est) == 300
+    for r in est:
+        assert r["est_count"] == expected(solo, r["tok"])
+        assert r["est_count"] >= r["true_count"]
+
+    gtab = grouped_count_min_table(df, "g", "tok", width=w, depth=d)
+    per_g: dict[str, dict[int, list[int]]] = {}
+    for r in gtab.collect():
+        per_g.setdefault(r["g"], {})[r["d"]] = r["counts"]
+    gprobes = df.groupBy("g", "tok").agg(F.count(F.lit(1)).alias("n"))
+    gest = grouped_cms_estimates(gtab, gprobes, "g", "tok").collect()
+    assert len(gest) == len(true)
+    for r in gest:
+        assert r["est_count"] == expected(per_g[r["g"]], r["tok"])
+        assert r["est_count"] >= true[(r["g"], r["tok"])]
 
 
 def test_cms_null_probe_returns_null_not_none_literal(spark):
@@ -264,14 +310,14 @@ def test_cms_null_probe_returns_null_not_none_literal(spark):
     )
     got = {
         (r["tok"],): r["est_count"]
-        for r in cms_estimates(tab, probes, "tok", width=w, depth=d).collect()
+        for r in cms_estimates(tab, probes, "tok").collect()
     }
     assert got[("a",)] >= 7 and got[("b",)] >= 3
     assert got[(None,)] is None
     # the literal string 'None' was never inserted either — and must not
     # alias the NULL probe's (former) bucket
     lit = spark.createDataFrame([("None",)], "tok string")
-    [r] = cms_estimates(tab, lit, "tok", width=w, depth=d).collect()
+    [r] = cms_estimates(tab, lit, "tok").collect()
     assert r["est_count"] is not None  # a real (collision-only) counter
 
     scm = StreamingCountMin("tok", width=w, depth=d)
@@ -294,10 +340,13 @@ def test_grouped_cms_equals_per_group_ungrouped_and_partition_independent(spark)
     """Each group's merged table must be bit-identical to the UNGROUPED
     table built over only that group's rows (the hash ignores the group),
     and identical under any partitioning — the exact-merge property
-    applied per group."""
+    applied per group. Misra-Gries follows partition boundaries, so on one
+    partition each group's heavy hitters must equal the ungrouped heavy
+    hitters of that group's rows: same (item, est_count, err_bound)."""
     from savio_training_dask_2019_spark.operators.sketches import (
         count_min_table,
         grouped_count_min_table,
+        grouped_heavy_hitters,
     )
 
     df = _grouped_cms_stream(spark)
@@ -323,6 +372,19 @@ def test_grouped_cms_equals_per_group_ungrouped_and_partition_independent(spark)
             assert g1[(lang, i)] == solo[i]
             assert sum(g1[(lang, i)]) == n
 
+    one = df.repartition(1)
+    hh = ("item", "est_count", "err_bound")
+    grouped = {}
+    for r in grouped_heavy_hitters(one, "lang", "tok", k=8, top=5).collect():
+        grouped.setdefault(r["g"], []).append(tuple(r[c] for c in hh))
+    assert set(grouped) == {"en", "de"}
+    for lang, got in grouped.items():
+        solo_hh = heavy_hitters(
+            one.where(F.col("lang") == lang), "tok", k=8, top=5
+        ).collect()
+        assert sorted(got) == sorted(tuple(r[c] for c in hh) for r in solo_hh)
+        assert got[0][2] > 0  # k=8 over 41 items: the sketch really prunes
+
 
 def test_grouped_cms_estimates_contract(spark):
     """Per-group overcount-only + per-group error bound; a shared token is
@@ -337,7 +399,7 @@ def test_grouped_cms_estimates_contract(spark):
     w, d = 1024, 4
     tab = grouped_count_min_table(df, "lang", "tok", width=w, depth=d)
     true = df.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("true_count"))
-    est = grouped_cms_estimates(tab, true, "lang", "tok", width=w, depth=d).collect()
+    est = grouped_cms_estimates(tab, true, "lang", "tok").collect()
     n_by_g = {r["lang"]: r["n"] for r in df.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert all(r["est_count"] >= r["true_count"] for r in est)
     for r in est:
@@ -351,7 +413,7 @@ def test_grouped_cms_estimates_contract(spark):
     )
     got = {
         (r["lang"], r["tok"]): r["est_count"]
-        for r in grouped_cms_estimates(tab, probes, "lang", "tok", width=w, depth=d).collect()
+        for r in grouped_cms_estimates(tab, probes, "lang", "tok").collect()
     }
     assert got[("en", None)] is None
     assert got[("fr", "tok0")] is None  # no sketch for fr != count zero
